@@ -70,7 +70,6 @@ def _copurchase_edges(
     ordered: bool,
     w_min: int = 1,
     weighted: bool = False,
-    return_ppo: bool = False,
 ) -> DataFrame:
     """The shared co-purchase edge build (single source of the edge
     contract for PageRank / triangles / recursive walks): ONE shuffle of
@@ -84,18 +83,26 @@ def _copurchase_edges(
     Returned COALESCED (a few MB at these SFs — without it every
     downstream iteration stage pays 32-task scheduling overhead) and
     PERSISTED (the iteration-invariant table every consumer re-reads)."""
+    return _edges_from_parts(
+        _parts_per_order(spark, sf_dir), ordered=ordered, w_min=w_min, weighted=weighted
+    )
+
+
+def _parts_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelize=False: the collect_set groupBy right below provides the
     # downstream parallelism, so load_table's round-robin repartition is a
     # pure extra exchange here (r13 A/B: no-repartition wins every pair,
     # ~2.1 vs ~1.7 s at sf0.1); on a real multi-file 100 TB table the
     # rebalance is a no-op either way (scan splits >> cores).
     li = load_table(spark, "lineitem", sf_dir, parallelize=False)
-    ppo = li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
-    if return_ppo:
-        # persist the per-order part sets so a caller needing order-level
-        # context (PPR's seed-order pick) reuses THIS shuffle instead of
-        # paying a second full lineitem pass (r13; ~0.9 s at sf0.1)
-        ppo = track(ppo.persist())
+    return li.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
+
+
+def _edges_from_parts(
+    ppo: DataFrame, *, ordered: bool, w_min: int = 1, weighted: bool = False
+) -> DataFrame:
+    """The edge half of ``_copurchase_edges``, over per-order part sets
+    (``l_orderkey``, ``ps``)."""
     cond = (F.col("u") < F.col("v")) if ordered else (F.col("u") != F.col("v"))
     e = (
         ppo.select(F.explode("ps").alias("u"), "ps")
@@ -107,8 +114,19 @@ def _copurchase_edges(
     if w_min > 1:
         e = e.filter(F.col("w") >= w_min)
     cols = ["u", "v", "w"] if weighted else ["u", "v"]
-    edges = track(e.select(*cols).coalesce(4).persist())
-    return (edges, ppo) if return_ppo else edges
+    return track(e.select(*cols).coalesce(4).persist())
+
+
+def _thread_target(spark: SparkSession, fn):
+    """``fn`` wrapped to inherit the caller's JVM thread-locals (job
+    group, scheduler pool) when py4j pinned-thread mode is on. With
+    pinned threads off, ``inheritable_thread_target(spark)`` returns the
+    session itself rather than a decorator, and ``fn`` runs unwrapped."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return wrap(fn) if callable(wrap) else fn
+
 
 _EDGE_CTES = """
 op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -1065,14 +1083,15 @@ SELECT p_partkey, rank_fp, ppr, pos FROM (
 def graph_ppr_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logflow.operators.graph import pagerank_fixed_point
 
-    # return_ppo: the seed-order pick reuses the edge build's own
-    # per-order part-set shuffle instead of a second lineitem pass (r13;
-    # the old op-distinct formulation referenced the 600k-row distinct
-    # twice and an r12 fix folded it to one extra groupBy — this removes
-    # even that). collect_set dedups parts within the order, so size(ps)
-    # is the distinct-part count the HAVING >= 2 filter needs; min_by
-    # picks the earliest such order.
-    und, ppo = _copurchase_edges(spark, sf_dir, ordered=False, return_ppo=True)
+    # the per-order part sets are persisted so the seed-order pick reuses
+    # the edge build's own shuffle instead of a second lineitem pass (r13,
+    # ~0.9 s at sf0.1; the old op-distinct formulation referenced the
+    # 600k-row distinct twice and an r12 fix folded it to one extra
+    # groupBy — this removes even that). collect_set dedups parts within
+    # the order, so size(ps) is the distinct-part count the HAVING >= 2
+    # filter needs; min_by picks the earliest such order.
+    ppo = track(_parts_per_order(spark, sf_dir).persist())
+    und = _edges_from_parts(ppo, ordered=False)
     ops = (
         ppo.filter(F.size("ps") >= 2)
         .agg(F.min_by("ps", "l_orderkey").alias("ps"))
@@ -2498,22 +2517,22 @@ def graph_louvain_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are deterministic — concurrency only changes job scheduling.
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-
     with ThreadPoolExecutor(max_workers=2) as pool:
         fm = pool.submit(
-            inheritable_thread_target(spark)(
+            _thread_target(
+                spark,
                 lambda: edges.agg(
                     F.count(F.lit(1)).cast("long").alias("m")
-                ).localCheckpoint(eager=True)
+                ).localCheckpoint(eager=True),
             )
         )
         fdeg = pool.submit(
-            inheritable_thread_target(spark)(
+            _thread_target(
+                spark,
                 lambda: bid.groupBy(F.col("u").alias("id"))
                 .agg(F.count(F.lit(1)).cast("long").alias("d"))
                 .coalesce(1)
-                .localCheckpoint(eager=True)
+                .localCheckpoint(eager=True),
             )
         )
         m = fm.result()
@@ -2599,15 +2618,14 @@ def graph_louvain_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # qb and qa are independent of each other — same §2.6 overlap
     with ThreadPoolExecutor(max_workers=2) as pool:
         fqb = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: _q4m2(labels, tot).localCheckpoint(eager=True)
+            _thread_target(
+                spark, lambda: _q4m2(labels, tot).localCheckpoint(eager=True)
             )
         )
         fqa = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: _q4m2(after.select("id", "lab"), tot2).localCheckpoint(
-                    eager=True
-                )
+            _thread_target(
+                spark,
+                lambda: _q4m2(after.select("id", "lab"), tot2).localCheckpoint(eager=True),
             )
         )
         qb = fqb.result()

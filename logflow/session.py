@@ -5,6 +5,21 @@ knob that matters at cluster scale explicit: AQE for runtime re-planning
 (skew joins, partition coalescing), a bounded shuffle-partition count,
 Arrow for any pandas exchange, and UTC so timestamp semantics match the
 DuckDB oracle byte-for-byte.
+
+Python call-site capture is off (``spark.python.sql.dataFrameDebugging
+.enabled=false``).  PySpark 4 wraps every Column/DataFrame API call to
+record its Python file:line for the "DataFrame query context" of error
+messages; with it on, each call pays about five Py4J round trips
+(``getActiveSession``, a ``conf.get``, ``PySparkCurrentOrigin.set`` and
+``clear``) plus a Python stack walk.  Plan construction makes hundreds
+of such calls per query (a probe counted 2,065 Py4J calls while building
+``trace_tree_edges`` with capture on, 775 with it off), a large share of
+the build time of sub-second queries.  Errors still raise with the same
+classes and error conditions; only the Python call-site context is
+dropped.  PySpark reads the setting once per process, at the first API
+call under an active session, so to debug with call sites pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to the first ``get_spark`` of the process.
 """
 
 from __future__ import annotations
@@ -58,6 +73,8 @@ def get_spark(
         # the table source (logflow.sources.tables truncates ns → µs,
         # matching DuckDB's conversion exactly).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # No per-API-call Python call-site capture (see module doc).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         # Static conf, default 100: with ~50 registered queries × several

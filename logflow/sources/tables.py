@@ -3,6 +3,23 @@
 Reads are plain ``spark.read.parquet`` so Catalyst gets the native parquet
 scan: column pruning + predicate pushdown reach the file footer
 (verify with ``df.explain`` → ``PushedFilters`` / ``ReadSchema``).
+
+Schema reuse: ``spark.read.parquet(path)`` without a schema launches a
+Spark job that reads the footers to infer one (0.12–0.14 s per call on a
+4-core host, against ~0.02 s with a supplied schema), and every query
+loads its tables again.  ``load_table`` therefore infers each table's
+``StructType`` once and keeps it in ``_SCHEMAS`` under the absolute
+path, together with the file's identity: ``st_mtime_ns`` and ``st_size``
+for a file; for a directory table, the sorted listing of its
+``.parquet`` parts with each part's ``st_mtime_ns`` and ``st_size``.  A
+cached schema is used only while the identity still matches, so a file
+rewritten in place (or a directory whose parts change) is inferred
+again and no stale schema is served; the new schema replaces the old
+entry, so the cache holds one entry per path.  Later calls read with
+``spark.read.schema(cached).parquet(path)``, which plans the same scan
+without the footer job.  The cached value is a plain Python
+``StructType``, so it stays valid across sessions and JVM restarts, and
+serves a vanilla session as well as ``logflow.session.get_spark``'s.
 """
 
 from __future__ import annotations
@@ -25,6 +42,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: then a no-op, so both layouts stay readable.
 _NANO_TS_COLS = {"events": ["ts"]}
 
+#: absolute path -> (file identity, inferred schema); see module doc
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
 
 def load_table(
     spark: SparkSession, name: str, sf_dir: str | None = None, parallelize: bool = True
@@ -45,15 +65,40 @@ def load_table(
     # nanosAsLong is a runtime-settable SQLConf, so this is safe per-read.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    key, ident = os.path.abspath(path), _file_identity(path)
+    cached = _SCHEMAS.get(key)
+    if ident is not None and cached is not None and cached[0] == ident:
+        schema = cached[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        # inferred under nanosAsLong=true (set above), so the cached schema
+        # is exactly what inference returns on every later call
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if ident is not None:
+            _SCHEMAS[key] = (ident, schema)
     for col in _NANO_TS_COLS.get(name, []):
-        if isinstance(df.schema[col].dataType, T.LongType):
+        if isinstance(schema[col].dataType, T.LongType):
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
     if parallelize:
         target = spark.sparkContext.defaultParallelism
         if _scan_splits(spark, path) < max(target // 2, 1):
             df = df.repartition(target)
     return df
+
+
+def _file_identity(path: str) -> tuple | None:
+    """What the schema cache compares to tell a file's versions apart, or
+    None (no caching) for a path that cannot be listed, e.g. a remote URI."""
+    try:
+        if os.path.isdir(path):
+            parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+            stats = [os.stat(os.path.join(path, f)) for f in parts]
+            return tuple((f, s.st_mtime_ns, s.st_size) for f, s in zip(parts, stats))
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
 
 
 def _scan_splits(spark: SparkSession, path: str) -> int:

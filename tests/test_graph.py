@@ -723,3 +723,21 @@ def test_graph_adamic_adar_semantics(spark, sf_dir):
             for z in common
         )
         assert r.aa_fp == want, (r.part_a, r.part_b, r.aa_fp, want)
+
+
+def test_louvain_refine_without_pinned_threads(spark, duck, sf_dir, monkeypatch):
+    """With py4j pinned-thread mode off, inheritable_thread_target(spark)
+    returns the session itself; the Louvain overlap must then submit its
+    checkpoints unwrapped instead of calling the session."""
+    import pyspark
+
+    from logflow.queries.graph import _thread_target
+    from tests.oracle import check_query
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda f=None: f)
+
+    def target():
+        return 1
+
+    assert _thread_target(spark, target) is target
+    check_query(spark, duck, "graph_louvain_refine", sf_dir)

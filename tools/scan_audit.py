@@ -38,6 +38,37 @@ from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def scan_counts(plan: str, min_dup: int) -> dict:
+    """Scan counts of one ``formatted`` plan string.
+
+    Tree lines ("Scan parquet ... (N)") are the node's appearances in
+    the executed tree — re-embedded subtrees repeat the id.  Detail
+    headers ("(N) Scan parquet") carry the block with the Location:
+    path.  Duplicates are keyed on the Location so distinct tables are
+    never lumped (r12 ADVICE): dup[path] = total tree appearances of
+    every node id whose detail block points at that path.  Appearances
+    whose node has no parsable Location are counted in
+    ``unparsed_scans`` instead: they cannot be grouped by table, and a
+    non-zero count means the parser no longer matches the plan format.
+    ``total_scans`` = every tree appearance of a scan node."""
+    tree_ids = re.findall(r"Scan parquet[^\n(]*\((\d+)\)", plan)
+    loc_by_id: dict[str, str] = {}
+    for m in re.finditer(
+        r"^\((\d+)\) Scan parquet[^\n]*\n(.*?)(?=^\(\d+\) |\Z)",
+        plan,
+        re.M | re.S,
+    ):
+        lm = re.search(r"Location: [^\[\n]*\[([^\]]+)\]", m.group(2))
+        if lm:
+            loc_by_id[m.group(1)] = lm.group(1)
+    c = Counter(loc_by_id[nid] for nid in tree_ids if nid in loc_by_id)
+    return {
+        "total_scans": len(tree_ids),
+        "unparsed_scans": sum(1 for nid in tree_ids if nid not in loc_by_id),
+        "dup": {k: v for k, v in c.items() if v >= min_dup},
+    }
+
+
 def main() -> int:
     from pyspark.sql import SparkSession
 
@@ -63,31 +94,7 @@ def main() -> int:
     for name, q in load_all().items():
         try:
             df = q.fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(mode)
-            # Tree lines ("Scan parquet ... (N)") are the node's
-            # appearances in the executed tree — re-embedded subtrees
-            # repeat the id.  Detail headers ("(N) Scan parquet") carry
-            # the block with the Location: path.  Key duplicates on the
-            # Location so distinct tables are never lumped (r12 ADVICE):
-            # dup[path] = total tree appearances of every node id whose
-            # detail block points at that path.
-            tree_ids = re.findall(r"Scan parquet[^\n(]*\((\d+)\)", plan)
-            loc_by_id: dict[str, str] = {}
-            for m in re.finditer(
-                r"^\((\d+)\) Scan parquet[^\n]*\n(.*?)(?=^\(\d+\) |\Z)",
-                plan,
-                re.M | re.S,
-            ):
-                nid, body = m.group(1), m.group(2)
-                lm = re.search(r"Location: [^\[\n]*\[([^\]]+)\]", body)
-                loc_by_id[nid] = lm.group(1) if lm else f"unknown-node-{nid}"
-            c: Counter = Counter()
-            for nid in tree_ids:
-                c[loc_by_id.get(nid, f"unknown-node-{nid}")] += 1
-            dup = {k: v for k, v in c.items() if v >= min_dup}
-            # total_scans = tree appearances (one consistent meaning:
-            # how many times a scan node occurs in the executed tree).
-            out[name] = {"total_scans": len(tree_ids), "dup": dup}
+            out[name] = scan_counts(df._jdf.queryExecution().explainString(mode), min_dup)
         except Exception:
             out[name] = {"err": traceback.format_exc()[-300:]}
         release_all()
@@ -99,9 +106,11 @@ def main() -> int:
     )
     for mx, k in flagged:
         print(f"DUP {mx:4}  {k}")
+    unparsed = sum(v.get("unparsed_scans", 0) for v in out.values())
     print(f"flagged {len(flagged)}/{len(out)} in {time.time() - t0:.0f}s")
+    print(f"unparsed scan nodes (no Location): {unparsed}")
     with open("/tmp/scan_audit.json", "w") as fh:
-        json.dump(out, fh)
+        json.dump({"unparsed_scans": unparsed, "queries": out}, fh)
     return 0
 
 
