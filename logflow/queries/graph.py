@@ -666,6 +666,12 @@ def graph_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BFS_HOPS = 3
 _BFS_SEEDS = 5
+#: Row bound for broadcasting BFS's visited set into the per-hop anti join.
+#: The set is one bigint column, built into a hashed relation and shipped
+#: to every task each hop: ~16 B per row, so the bound caps that at
+#: ~16 MB. At or above it the anti join carries no hint and Spark picks its
+#: strategy from size estimates (a shuffled join at scale).
+_BFS_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def _bfs_level_ctes() -> str:
@@ -740,13 +746,14 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # broadcast the frontier/visited sets so the persisted edge table
         # streams map-side instead of shuffling per hop (r13 A/B: wins
         # every interleaved pair, ~3.9 -> ~3.3 s at sf0.1; the
-        # betweenness lesson). Past broadcast size the module-doc
-        # bucketed layout replaces the hint.
+        # betweenness lesson). The visited set only grows, so its hint
+        # holds only below _BFS_BROADCAST_MAX_ROWS (exact running count).
+        seen = F.broadcast(visited) if n_visited < _BFS_BROADCAST_MAX_ROWS else visited
         nxt = (
             edges.join(F.broadcast(frontier), "u")
             .select(F.col("v").alias("u"))
             .distinct()
-            .join(F.broadcast(visited), "u", "left_anti")
+            .join(seen, "u", "left_anti")
             # size-derived (never a hardcoded 1): the next frontier is at
             # most the edges incident to the current one; estimate with a
             # fan-out factor of 8 over the (exactly counted) current size

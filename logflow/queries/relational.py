@@ -14,18 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from logflow.functions.money import dec, money
 from logflow.operators.joins import asof_join, broadcast_dim_join
 from logflow.queries import register
 from logflow.sources.tables import load_table
-
-
-def _dec(col: str, prec: int = 12, scale: int = 2) -> F.Column:
-    return F.col(col).cast(f"decimal({prec},{scale})")
-
-
-def _money(sum_col: F.Column, ndigits: int = 2) -> F.Column:
-    """Exact decimal sum → rounded double (cross-engine stable)."""
-    return F.round(sum_col, ndigits).cast("double")
 
 
 def _ratio(num: F.Column, den: F.Column, ndigits: int = 4) -> F.Column:
@@ -62,7 +54,7 @@ GROUP BY l_returnflag, l_linestatus
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
-    price = _dec("l_extendedprice")
+    price = dec("l_extendedprice")
     disc_f = (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
     tax_f = (F.lit(1.0) + F.col("l_tax")).cast("decimal(4,2)")
     n = F.count(F.lit(1))
@@ -70,11 +62,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-01 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _money(F.sum(_dec("l_quantity"))).alias("sum_qty"),
-            _money(F.sum(price)).alias("sum_base_price"),
-            _money(F.sum(price * disc_f)).alias("sum_disc_price"),
-            _money(F.sum(price * disc_f * tax_f)).alias("sum_charge"),
-            _ratio(F.sum(_dec("l_quantity")), n).alias("avg_qty"),
+            money(F.sum(dec("l_quantity"))).alias("sum_qty"),
+            money(F.sum(price)).alias("sum_base_price"),
+            money(F.sum(price * disc_f)).alias("sum_disc_price"),
+            money(F.sum(price * disc_f * tax_f)).alias("sum_charge"),
+            _ratio(F.sum(dec("l_quantity")), n).alias("avg_qty"),
             _ratio(F.sum(price), n).alias("avg_price"),
             _ratio(F.sum(F.col("l_discount").cast("decimal(8,2)")), n).alias("avg_disc"),
             n.cast("long").alias("count_order"),
@@ -115,12 +107,12 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir).filter(
         F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp")
     )
-    revenue = F.sum(_dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))
+    revenue = F.sum(dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_money(revenue).alias("revenue"))
+        .agg(money(revenue).alias("revenue"))
         .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
         .limit(10)
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
@@ -152,7 +144,7 @@ def q5_local_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, "supplier", sf_dir)
     nation = load_table(spark, "nation", sf_dir)
     region = load_table(spark, "region", sf_dir).filter(F.col("r_name").isin("ASIA", "EUROPE"))
-    revenue = F.sum(_dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))
+    revenue = F.sum(dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))
     joined = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -161,7 +153,7 @@ def q5_local_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
     return joined.groupBy("n_name").agg(
-        _money(revenue).alias("revenue"),
+        money(revenue).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -189,7 +181,7 @@ def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            _money(F.sum(_dec("c_acctbal"))).alias("total_acctbal"),
+            money(F.sum(dec("c_acctbal"))).alias("total_acctbal"),
         )
     )
 
@@ -294,7 +286,7 @@ def join_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),
-            _money(F.sum(_dec("p_retailprice"))).alias("total_price"),
+            money(F.sum(dec("p_retailprice"))).alias("total_price"),
         )
     )
 
@@ -380,7 +372,7 @@ def window_running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.row_number().over(w_nof).cast("long").alias("order_seq"),
-        F.round(F.sum(_dec("o_totalprice")).over(w), 2).cast("double").alias("cum_spend"),
+        F.round(F.sum(dec("o_totalprice")).over(w), 2).cast("double").alias("cum_spend"),
         F.lag("o_totalprice").over(w_nof).alias("prev_price"),
     )
 
@@ -500,7 +492,7 @@ def agg_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping_id().cast("long").alias("gid"),
-        _money(F.sum(_dec("l_quantity"))).alias("sum_qty"),
+        money(F.sum(dec("l_quantity"))).alias("sum_qty"),
         F.count(F.lit(1)).alias("n"),
     )
 
@@ -522,7 +514,7 @@ def agg_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.grouping_id().cast("long").alias("gid"),
         F.count(F.lit(1)).alias("n"),
-        _money(F.sum(_dec("o_totalprice"))).alias("total"),
+        money(F.sum(dec("o_totalprice"))).alias("total"),
     )
 
 
@@ -764,7 +756,7 @@ def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            _money(F.sum(_dec("value"))).alias("total_value"),
+            money(F.sum(dec("value"))).alias("total_value"),
         )
         .select(F.col("w.start").alias("hour_start"), "event_type", "n", "total_value")
     )
@@ -908,7 +900,7 @@ def window_range_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_custkey",
             "day",
-            F.round(F.sum(_dec("o_totalprice")).over(w), 2).cast("double").alias("rev_7d"),
+            F.round(F.sum(dec("o_totalprice")).over(w), 2).cast("double").alias("rev_7d"),
         )
     )
 
@@ -1158,9 +1150,9 @@ SELECT l_returnflag, 'sum_disc'  AS measure, sum_disc  AS value FROM agg
 def unpivot_returnflag_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
     agg = li.groupBy("l_returnflag").agg(
-        _money(F.sum(_dec("l_quantity"))).alias("sum_qty"),
-        _money(F.sum(_dec("l_extendedprice"))).alias("sum_price"),
-        _money(F.sum(F.col("l_discount").cast("decimal(8,2)"))).alias("sum_disc"),
+        money(F.sum(dec("l_quantity"))).alias("sum_qty"),
+        money(F.sum(dec("l_extendedprice"))).alias("sum_price"),
+        money(F.sum(F.col("l_discount").cast("decimal(8,2)"))).alias("sum_disc"),
     )
     return agg.unpivot(
         ids=["l_returnflag"],
@@ -1237,10 +1229,10 @@ def join_bucketed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("orderkey"), "o_orderdate"
     )
     j = bucketed_join(spark, orders, li, on=["orderkey"], buckets=8, table_prefix="logflow_bjq")
-    revenue = F.sum(_dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))
+    revenue = F.sum(dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))
     return (
         j.groupBy("orderkey")
-        .agg(_money(revenue).alias("revenue"), F.count(F.lit(1)).cast("long").alias("n_items"))
+        .agg(money(revenue).alias("revenue"), F.count(F.lit(1)).cast("long").alias("n_items"))
         .orderBy(F.desc("revenue"), "orderkey")
         .limit(10)
         .select(F.col("orderkey").alias("o_orderkey"), "revenue", "n_items")
@@ -1323,7 +1315,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") < 24)
     )
     return f.agg(
-        _money(F.sum(_dec("l_extendedprice") * F.col("l_discount").cast("decimal(4,2)"))).alias(
+        money(F.sum(dec("l_extendedprice") * F.col("l_discount").cast("decimal(4,2)"))).alias(
             "revenue"
         ),
         F.count(F.lit(1)).cast("long").alias("n_items"),
@@ -1361,13 +1353,13 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, "lineitem", sf_dir).filter(F.col("l_returnflag") == "R")
     nation = load_table(spark, "nation", sf_dir)
-    revenue = F.sum(_dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))
+    revenue = F.sum(dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(_money(revenue).alias("revenue"))
+        .agg(money(revenue).alias("revenue"))
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
         .select("c_custkey", "c_name", "n_name", "revenue")
@@ -1400,7 +1392,7 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     )
     part = load_table(spark, "part", sf_dir).select("p_partkey", "p_type")
-    disc_price = _dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
+    disc_price = dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
     promo = F.when(F.col("p_type") == "PROMO", disc_price).otherwise(
         F.lit(0).cast("decimal(12,2)")
     )
@@ -1484,7 +1476,7 @@ LIMIT 50
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
     w = Window.partitionBy("l_orderkey")
-    big_items = li.withColumn("oq", F.sum(_dec("l_quantity")).over(w)).filter(
+    big_items = li.withColumn("oq", F.sum(dec("l_quantity")).over(w)).filter(
         F.col("oq") > 250
     )
     orders = load_table(spark, "orders", sf_dir)
@@ -1493,7 +1485,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         big_items.join(orders, big_items.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_custkey", "c_name", "o_orderkey", "o_orderdate")
-        .agg(_money(F.sum(_dec("l_quantity"))).alias("total_qty"))
+        .agg(money(F.sum(dec("l_quantity"))).alias("total_qty"))
         .orderBy(F.desc("total_qty"), "o_orderkey")
         .limit(50)
         .select("c_custkey", "c_name", "o_orderkey", "o_orderdate", "total_qty")
@@ -1541,7 +1533,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return j.filter(cond).agg(
-        _money(F.sum(_dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))).alias(
+        money(F.sum(dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)"))).alias(
             "revenue"
         ),
         F.count(F.lit(1)).cast("long").alias("n_items"),
@@ -1723,7 +1715,7 @@ def source_json_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     js = spark.read.schema(ev.schema).json(base)
     return js.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        _money(F.sum(F.col("value").cast("decimal(14,4)"))).alias("sum_value"),
+        money(F.sum(F.col("value").cast("decimal(14,4)"))).alias("sum_value"),
     )
 
 
@@ -1755,7 +1747,7 @@ def source_csv_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs = spark.read.schema(orders.schema).option("header", "true").csv(base)
     return cs.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
-        _money(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias("total_price"),
+        money(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias("total_price"),
     )
 
 
@@ -1790,7 +1782,7 @@ def source_orc_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     oc = spark.read.schema(li.schema).orc(base)
     return oc.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"),
-        _money(F.sum(F.col("l_extendedprice").cast("decimal(14,2)"))).alias(
+        money(F.sum(F.col("l_extendedprice").cast("decimal(14,2)"))).alias(
             "total_price"
         ),
         F.sum(F.col("l_quantity").cast("bigint")).cast("long").alias("total_qty"),
@@ -2011,7 +2003,7 @@ def aggstate_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def state(df):
         return df.groupBy(F.col("l_returnflag").alias("flag")).agg(
             F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.sum(_dec("l_extendedprice", 14)).alias("total"),
+            F.sum(dec("l_extendedprice", 14)).alias("total"),
         )
 
     old = state(li.filter(F.col("l_shipdate") < cut)).alias("o")
@@ -2065,7 +2057,7 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey")
     )
     j = li.join(orders, li.l_orderkey == orders.o_orderkey).agg(
-        F.round(F.sum(_dec("l_extendedprice", 14)), 2).cast("double").alias("revenue"),
+        F.round(F.sum(dec("l_extendedprice", 14)), 2).cast("double").alias("revenue"),
         F.count(F.lit(1)).cast("long").alias("n_items"),
     )
     saved = {
@@ -3117,7 +3109,7 @@ def golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("max_by(o_orderstatus, ver_key)").alias("latest_status"),
             F.expr("max_by(o_orderpriority, ver_key)").alias("latest_priority"),
             F.expr("max_by(o_orderpriority, price_key)").alias("top_spend_priority"),
-            _money(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias(
+            money(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias(
                 "total_spend"
             ),
         )
@@ -3254,7 +3246,7 @@ def agg_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(_money(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias("nation_rev"))
+        .agg(money(F.sum(F.col("o_totalprice").cast("decimal(14,2)"))).alias("nation_rev"))
     )
     wreg = Window.partitionBy("region")
     wall = Window.partitionBy()
@@ -3825,7 +3817,7 @@ def source_xml_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return xml.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        _money(F.sum(F.col("value").cast("decimal(14,4)"))).alias("sum_value"),
+        money(F.sum(F.col("value").cast("decimal(14,4)"))).alias("sum_value"),
         F.countDistinct("user_id").cast("long").alias("n_users"),
     )
 
@@ -5841,7 +5833,7 @@ def source_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.when(F.col("_corrupt").isNull(), 1)).cast("long").alias("n_good"),
             F.count("_corrupt").cast("long").alias("n_corrupt"),
-            _money(
+            money(
                 F.sum(
                     F.when(
                         F.col("_corrupt").isNull(),

@@ -39,17 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logflow.functions.money import dec, money
 from logflow.operators.cache import track
 from logflow.queries import register
 from logflow.sources.tables import load_table
-
-
-def _dec(col: str, prec: int = 12, scale: int = 2) -> F.Column:
-    return F.col(col).cast(f"decimal({prec},{scale})")
-
-
-def _money(sum_col: F.Column, ndigits: int = 2) -> F.Column:
-    return F.round(sum_col, ndigits).cast("double")
 
 
 _VOLUME_SQL = (
@@ -58,7 +51,7 @@ _VOLUME_SQL = (
 
 
 def _volume() -> F.Column:
-    return _dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
+    return dec("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")).cast("decimal(4,2)")
 
 
 @register(
@@ -119,7 +112,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("supp_nation") != F.col("cust_nation"))
         .withColumn("l_year", F.year("l_shipdate").cast("long"))
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(_money(F.sum(_volume())).alias("revenue"))
+        .agg(money(F.sum(_volume())).alias("revenue"))
     )
 
 
@@ -231,9 +224,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, "orders", sf_dir)
     nation = load_table(spark, "nation", sf_dir)
     amount = _volume() - (
-        _dec("p_retailprice")
+        dec("p_retailprice")
         * F.lit(0.1).cast("decimal(4,2)")
-        * _dec("l_quantity")
+        * dec("l_quantity")
     )
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -246,7 +239,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             amount.alias("amount"),
         )
         .groupBy("nation", "o_year")
-        .agg(_money(F.sum("amount")).alias("sum_profit"))
+        .agg(money(F.sum("amount")).alias("sum_profit"))
     )
 
 
@@ -417,7 +410,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = (
         li.join(F.broadcast(part_f), li.l_partkey == part_f.p_partkey)
         .groupBy("l_partkey", "l_suppkey", "p_partkey", "p_name")
-        .agg(F.min(_dec("l_extendedprice")).alias("mincost"))
+        .agg(F.min(dec("l_extendedprice")).alias("mincost"))
     )
     regional = (
         ps.join(supp, ps.l_suppkey == supp.s_suppkey)
@@ -530,7 +523,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(_dec("l_extendedprice", 18)).alias("val"))
+        .agg(F.sum(dec("l_extendedprice", 18)).alias("val"))
         .persist()  # read twice: grand total + threshold filter
     )
     track(per_part)
@@ -623,12 +616,12 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("l_partkey")
     cand = (
         li.join(F.broadcast(part_f), li.l_partkey == part_f.p_partkey)
-        .withColumn("qty_sum", F.sum(_dec("l_quantity")).over(w))
+        .withColumn("qty_sum", F.sum(dec("l_quantity")).over(w))
         .withColumn("qty_cnt", F.count(F.lit(1)).over(w))
     )
     thr = F.lit(0.2) * (F.col("qty_sum").cast("double") / F.col("qty_cnt"))
     return cand.filter(F.col("l_quantity").cast("double") < thr).agg(
-        F.round(F.sum(_dec("l_extendedprice")).cast("double") / F.lit(7.0), 2)
+        F.round(F.sum(dec("l_extendedprice")).cast("double") / F.lit(7.0), 2)
         .cast("double")
         .alias("avg_yearly")
     )
@@ -668,7 +661,7 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualified = (
         li.join(F.broadcast(part_hot), li.l_partkey == part_hot.p_partkey, "left_semi")
         .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum(_dec("l_quantity")).alias("qty"))
+        .agg(F.sum(dec("l_quantity")).alias("qty"))
         .filter(F.col("qty") > F.lit(30).cast("decimal(12,2)"))
         .select("l_suppkey")
     )

@@ -12,13 +12,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from logflow.functions.headers import header_value_str
+from logflow.functions.headers import header_value_str_sql
+from logflow.functions.trace import sql_str
+from logflow.model import TOPIC_EVEN, TOPIC_ODD
 from logflow.operators.topology import (
+    EVEN_BRANCH,
+    MESSAGEID,
+    PARENT_SPAN_ID,
+    TRACE_ID,
     enrich_trace,
     logs_from_records,
     rewrite_remote_service,
     route_even_odd,
     spans_from_records,
+    stage_span_sql,
 )
 from logflow.queries import register
 from logflow.sources.records import records_from_events
@@ -88,16 +95,17 @@ def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _route(spark: SparkSession, sf_dir: str, even: bool) -> DataFrame:
-    even_df, odd_df = route_even_odd(enrich_trace(_records(spark, sf_dir)))
-    df = even_df if even else odd_df
-    return df.select(
+    # enrich_trace + route_even_odd + the projection, as one filter and one
+    # projection (span_id reads trace_id as a lateral alias).
+    pred, topic = (EVEN_BRANCH, TOPIC_EVEN) if even else (f"NOT {EVEN_BRANCH}", TOPIC_ODD)
+    return _records(spark, sf_dir).filter(pred).selectExpr(
         "key",
         "value",
-        "topic",
-        "trace_id",
-        "parent_span_id",
-        "span_id",
-        F.col("baggage")["messageid"].alias("messageid"),
+        f"{sql_str(topic)} AS topic",
+        f"{TRACE_ID} AS trace_id",
+        f"{PARENT_SPAN_ID} AS parent_span_id",
+        f"{stage_span_sql('set')} AS span_id",
+        f"{MESSAGEID} AS messageid",
     )
 
 
@@ -150,10 +158,7 @@ def trace_branch_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         even.unionByName(odd)
         .groupBy("topic")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").cast("long").alias("sum_value"),
-        )
+        .agg(F.expr("count(1) AS n"), F.expr("cast(sum(value) as bigint) AS sum_value"))
     )
 
 
@@ -173,10 +178,9 @@ WHERE name = 'send'
 def trace_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = spans_from_records(_records(spark, sf_dir))
     return spans.filter(
-        (F.col("name") == "send")
-        & (F.col("kafka_topic") == "even-numbers")
-        & F.col("duration_us").between(1000, 4000)
-        & F.col("ts").between("2024-01-05 00:00:00", "2024-01-20 00:00:00")
+        "((name = 'send' AND kafka_topic = 'even-numbers')"
+        " AND (duration_us >= 1000 AND duration_us <= 4000))"
+        " AND (ts >= '2024-01-05 00:00:00' AND ts <= '2024-01-20 00:00:00')"
     ).select("trace_id", "span_id", "ts", "duration_us")
 
 
@@ -201,15 +205,13 @@ def trace_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Self-join co-partitioned on trace_id: both sides shuffle on the same
     # key, so at scale this is one exchange each and a local join.
     return child.join(
-        parent,
-        (F.col("c.trace_id") == F.col("p.trace_id")) & (F.col("c.parent_id") == F.col("p.span_id")),
-        "left",
-    ).select(
-        F.col("c.trace_id").alias("trace_id"),
-        F.col("c.span_id").alias("span_id"),
-        F.col("c.name").alias("name"),
-        F.col("p.name").alias("parent_name"),
-        F.timestamp_diff("MICROSECOND", F.col("p.ts"), F.col("c.ts")).alias("gap_us"),
+        parent, F.expr("c.trace_id = p.trace_id AND c.parent_id = p.span_id"), "left"
+    ).selectExpr(
+        "c.trace_id AS trace_id",
+        "c.span_id AS span_id",
+        "c.name AS name",
+        "p.name AS parent_name",
+        "timestampdiff(MICROSECOND, p.ts, c.ts) AS gap_us",
     )
 
 
@@ -230,10 +232,10 @@ GROUP BY trace_id
 def trace_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = spans_from_records(_records(spark, sf_dir))
     return spans.groupBy("trace_id").agg(
-        F.count(F.lit(1)).alias("n_spans"),
-        F.sum("duration_us").cast("long").alias("total_duration_us"),
-        F.min("ts").alias("started_at"),
-        F.max("duration_us").alias("max_span_us"),
+        F.expr("count(1) AS n_spans"),
+        F.expr("cast(sum(duration_us) as bigint) AS total_duration_us"),
+        F.expr("min(ts) AS started_at"),
+        F.expr("max(duration_us) AS max_span_us"),
     )
 
 
@@ -254,9 +256,9 @@ GROUP BY 1, 2
 def trace_dependency_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = rewrite_remote_service(spans_from_records(_records(spark, sf_dir)))
     return (
-        spans.filter(F.col("kafka_topic").isNotNull())
-        .groupBy("service", F.col("remote_service").alias("remote"))
-        .agg(F.count(F.lit(1)).alias("call_count"))
+        spans.filter("kafka_topic IS NOT NULL")
+        .groupBy(F.expr("service"), F.expr("remote_service AS remote"))
+        .agg(F.expr("count(1) AS call_count"))
     )
 
 
@@ -282,9 +284,8 @@ GROUP BY 1, 2
 )
 def trace_log_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs = logs_from_records(_records(spark, sf_dir))
-    return logs.groupBy("logger", F.col("trace_id").isNotNull().alias("traced")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("trace_id").alias("n_traces"),
+    return logs.groupBy(F.expr("logger"), F.expr("trace_id IS NOT NULL AS traced")).agg(
+        F.expr("count(1) AS n"), F.expr("count(DISTINCT trace_id) AS n_traces")
     )
 
 
@@ -302,13 +303,12 @@ FROM records WHERE value % 2 = 0
     "header plumbing is correct.",
 )
 def trace_baggage_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    even, _ = route_even_odd(enrich_trace(_records(spark, sf_dir)))
-    expected = F.concat(F.lit("messageid_"), F.col("value").cast("string"))
-    return even.select(
-        F.count(F.lit(1)).alias("n_even"),
-        F.sum(
-            F.when(header_value_str("headers", "messageid") == expected, 1).otherwise(0)
-        ).cast("long").alias("n_propagated"),
+    # the even branch of route_even_odd; its topic stamp is not read
+    even = enrich_trace(_records(spark, sf_dir)).filter(EVEN_BRANCH)
+    propagated = f"{header_value_str_sql('headers', 'messageid')} = {MESSAGEID}"
+    return even.selectExpr(
+        "count(1) AS n_even",
+        f"cast(sum(CASE WHEN {propagated} THEN 1 ELSE 0 END) as bigint) AS n_propagated",
     )
 
 
@@ -339,26 +339,21 @@ GROUP BY value % 2
 )
 def source_custom_wirelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logflow.functions.codec import int_be_decode
-    from logflow.functions.trace import parse_b3
     from logflow.sources.derived import derived_cache
     from logflow.sources.wirelog import register_wirelog, write_wirelog
     from logflow.streaming.sinks import kafka_wire_frame
 
-    ev = load_table(spark, "events", sf_dir, parallelize=False)
-    enriched = enrich_trace(records_from_events(ev))
-    base = derived_cache(
-        sf_dir,
-        "wirelog",
-        ["events"],
-        lambda d: write_wirelog(kafka_wire_frame(enriched), d),
-    )
+    def writer(d: str) -> None:
+        ev = load_table(spark, "events", sf_dir, parallelize=False)
+        write_wirelog(kafka_wire_frame(enrich_trace(records_from_events(ev))), d)
+
+    base = derived_cache(sf_dir, "wirelog", ["events"], writer)
     register_wirelog(spark)
     raw = spark.read.format("wirelog").option("path", base).load()
-    ctx = parse_b3(header_value_str("headers", "b3"))
     decoded = raw.select(
         F.decode(F.col("key"), "UTF-8").alias("key"),
         int_be_decode(F.col("value")).cast("long").alias("value"),
-        ctx["trace_id"].alias("trace_id"),
+        F.expr(TRACE_ID).alias("trace_id"),
     )
     return decoded.groupBy((F.col("value") % 2).alias("bucket")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -16,10 +16,9 @@ from __future__ import annotations
 import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from logflow.functions.headers import put_header
-from logflow.functions.trace import b3_single_header, span_id_for, trace_id_for
+from logflow.functions.headers import put_header_sql
+from logflow.functions.trace import b3_single_header_sql, span_id_sql, sql_str, trace_id_sql
 from logflow.model import RECORD_SCHEMA, TOPIC_INPUT
 
 
@@ -31,21 +30,16 @@ def records_from_events(events: DataFrame) -> DataFrame:
     engine's oracle, DuckDB, rounds on double→int casts while Spark
     truncates; FLOOR is identical in both.
     """
-    value_int = F.floor(F.col("value")).cast("long")
-    trace_id = trace_id_for("event_id")
-    root_span = span_id_for("event_id")
-    return events.select(
-        F.concat(F.lit("user-"), F.col("user_id").cast("string")).alias("key"),
-        value_int.alias("value"),
-        F.lit(TOPIC_INPUT).alias("topic"),
-        F.lit(0).alias("partition"),
-        F.col("event_id").alias("offset"),
-        F.col("ts").alias("ts"),
-        put_header(
-            F.lit(None).cast("array<struct<key:string,value:binary>>"),
-            "b3",
-            b3_single_header(trace_id, root_span),
-        ).alias("headers"),
+    b3 = b3_single_header_sql(trace_id_sql("event_id"), span_id_sql("event_id"))
+    no_headers = "cast(NULL as array<struct<key:string,value:binary>>)"
+    return events.selectExpr(
+        "concat('user-', cast(user_id as string)) AS key",
+        "cast(floor(value) as bigint) AS value",
+        f"{sql_str(TOPIC_INPUT)} AS topic",
+        "0 AS `partition`",
+        "event_id AS `offset`",
+        "ts",
+        f"{put_header_sql(no_headers, 'b3', b3)} AS headers",
     )
 
 

@@ -13,18 +13,18 @@ the writers are thin wrappers over ``format("kafka")``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logflow.functions.codec import int_be_encode
 from logflow.functions.headers import put_header
-from logflow.functions.trace import b3_single_header
+from logflow.functions.trace import b3_single_header_sql
 
 
 def kafka_wire_frame(
     records: DataFrame,
     topic: str | None = None,
-    sampled: Column | bool = True,
+    sampled: str | bool = True,
 ) -> DataFrame:
     """Record frame → Kafka producer frame (the serde layer, S2 inverted).
 
@@ -33,13 +33,13 @@ def kafka_wire_frame(
     array with ``b3`` overwritten from the CURRENT trace context (the
     stage's span id, not the consumed parent's — reference behavior per
     StreamsConfigTest.java:64-66) and baggage kept as its own header.
+    ``sampled`` is a boolean SQL expression or a constant.
     """
-    b3 = b3_single_header("trace_id", "span_id", sampled)
-    headers = put_header("headers", "b3", b3)
+    b3 = b3_single_header_sql("trace_id", "span_id", sampled)
     out = records.select(
-        F.encode(F.col("key"), "UTF-8").alias("key"),
-        int_be_encode(F.col("value").cast("int")).alias("value"),
-        headers.alias("headers"),
+        F.encode("key", "UTF-8").alias("key"),
+        int_be_encode("value").alias("value"),
+        put_header("headers", "b3", b3).alias("headers"),
     )
     if topic is not None:
         out = out.withColumn("topic", F.lit(topic))

@@ -53,7 +53,7 @@ def file_record_stream(spark: SparkSession, path: str) -> DataFrame:
 def rate_record_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
     """Synthetic record stream from the rate source (load/perf testing)."""
     from logflow.functions.headers import put_header
-    from logflow.functions.trace import b3_single_header, span_id_for, trace_id_for
+    from logflow.functions.trace import b3_single_header_sql, span_id_sql, trace_id_sql
 
     rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
     return rate.select(
@@ -64,8 +64,8 @@ def rate_record_stream(spark: SparkSession, rows_per_second: int = 100) -> DataF
         F.col("value").alias("offset"),
         F.col("timestamp").alias("ts"),
         put_header(
-            F.lit(None).cast("array<struct<key:string,value:binary>>"),
+            "cast(NULL as array<struct<key:string,value:binary>>)",
             "b3",
-            b3_single_header(trace_id_for(F.col("value")), span_id_for(F.col("value"))),
+            b3_single_header_sql(trace_id_sql("value"), span_id_sql("value")),
         ).alias("headers"),
     )

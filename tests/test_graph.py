@@ -741,3 +741,34 @@ def test_louvain_refine_without_pinned_threads(spark, duck, sf_dir, monkeypatch)
 
     assert _thread_target(spark, target) is target
     check_query(spark, duck, "graph_louvain_refine", sf_dir)
+
+
+def test_bfs_visited_broadcast_falls_back_above_bound(spark, duck, sf_dir, monkeypatch):
+    """BFS hints its visited set for broadcast only below
+    _BFS_BROADCAST_MAX_ROWS; with the bound patched to 0 every hop takes
+    the plain anti join (one broadcast per hop, the frontier's, instead
+    of two) and the levels still match the oracle."""
+    from pyspark.sql import functions as F
+
+    from logflow.operators.cache import release_all
+    from logflow.queries import graph, load_all
+    from tests.oracle import check_query
+
+    calls = []
+    real = F.broadcast
+
+    def spy(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(F, "broadcast", spy)
+    fn = load_all()["graph_bfs_levels"].fn
+    fn(spark, sf_dir).collect()
+    release_all()
+    hinted = len(calls)
+
+    monkeypatch.setattr(graph, "_BFS_BROADCAST_MAX_ROWS", 0)
+    calls.clear()
+    check_query(spark, duck, "graph_bfs_levels", sf_dir)
+    assert hinted > 0
+    assert len(calls) * 2 == hinted

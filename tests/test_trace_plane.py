@@ -8,10 +8,17 @@ baggage propagation (messageid_8 survives to the sink headers).
 
 from __future__ import annotations
 
+import gc
+import hashlib
+
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from logflow.functions import headers as H
+from logflow.functions import trace as T
 from logflow.functions.headers import header_value_str
+from logflow.model import RECORD_SCHEMA
 from logflow.operators.branch import branch
 from logflow.operators.topology import enrich_trace, route_even_odd, spans_from_records
 from logflow.sources.records import numbers_fixture
@@ -149,3 +156,234 @@ def test_wire_frame_bytes_matches_python_reference_framing(spark):
         _write_frame(buf, key, value, headers or [])
         want.append(buf.getvalue())
     assert got == want
+
+
+# --- plan-build cost: Py4J round trips -------------------------------------
+
+#: Round trips to build each query (q.fn only, warm schema cache) before the
+#: trace helpers emitted SQL text; the budget is 40 % of these.
+PARENT_ROUND_TRIPS = {"trace_tree_edges": 773, "trace_route_even": 747}
+
+
+@pytest.mark.parametrize("name", sorted(PARENT_ROUND_TRIPS))
+def test_build_round_trip_budget(spark, sf_dir, monkeypatch, name):
+    from logflow.operators.cache import release_all
+    from logflow.queries import load_all
+
+    fn = load_all()[name].fn
+    fn(spark, sf_dir)  # warm: load_table's schema cache, lazy imports
+    release_all()
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command.split("\n", 1)[0])
+        return real(command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()  # no finalizer traffic from earlier garbage in the window
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            fn(spark, sf_dir)
+    finally:
+        gc.enable()
+        release_all()
+    assert 0 < len(sent) <= 0.4 * PARENT_ROUND_TRIPS[name], (len(sent), name)
+
+
+# --- fragment equivalence: SQL-text helpers vs the Column-DSL spec ----------
+# The pre-change Column-DSL helpers, kept verbatim as the specification.
+
+
+def _spec_trace_id_for(seed: Column) -> Column:
+    return F.md5(F.concat(F.lit("trace:"), seed.cast("string")))
+
+
+def _spec_span_id_for(seed: Column) -> Column:
+    return F.substring(F.md5(F.concat(F.lit("span:"), seed.cast("string"))), 1, T.SPAN_ID_HEX)
+
+
+def _spec_child_span_id(trace_id: Column, stage: str, offset: Column) -> Column:
+    return F.substring(
+        F.md5(F.concat_ws(":", trace_id, F.lit(stage), offset.cast("string"))), 1, T.SPAN_ID_HEX
+    )
+
+
+def _spec_b3_single_header(trace_id: Column, span_id: Column, sampled: Column | bool = True) -> Column:
+    flag = (
+        F.when(sampled, F.lit("1")).otherwise(F.lit("0"))
+        if isinstance(sampled, Column)
+        else F.lit("1" if sampled else "0")
+    )
+    return F.concat_ws("-", trace_id, span_id, flag)
+
+
+def _spec_parse_b3(b3: Column) -> Column:
+    parts = F.split(b3, "-")
+    return F.struct(
+        F.element_at(parts, 1).alias("trace_id"),
+        F.element_at(parts, 2).alias("span_id"),
+        F.lit(None).cast("string").alias("parent_span_id"),
+        (F.element_at(parts, 3) == F.lit("1")).alias("sampled"),
+    )
+
+
+def _spec_last_header(headers: Column, name: str) -> Column:
+    matches = F.filter(headers, lambda h: h["key"] == F.lit(name))
+    return F.element_at(matches, -1)["value"]
+
+
+def _spec_header_value_str(headers: Column, name: str) -> Column:
+    return _spec_last_header(headers, name).cast("string")
+
+
+def _spec_put_header(headers: Column, name: str, value: Column) -> Column:
+    entry = F.struct(F.lit(name).alias("key"), F.encode(value, "utf-8").alias("value"))
+    return F.when(headers.isNull(), F.array(entry)).otherwise(F.concat(headers, F.array(entry)))
+
+
+def _spec_enrich_trace(records, stage: str = "set"):
+    ctx = _spec_parse_b3(_spec_header_value_str(F.col("headers"), "b3"))
+    with_ctx = records.withColumns(
+        {"trace_id": ctx["trace_id"], "parent_span_id": ctx["span_id"], "sampled": ctx["sampled"]}
+    )
+    new_span = _spec_child_span_id(F.col("trace_id"), stage, F.col("offset"))
+    messageid = F.concat(F.lit("messageid_"), F.col("value").cast("string"))
+    b3 = _spec_b3_single_header(F.col("trace_id"), F.col("span_id"))
+    return (
+        with_ctx.withColumn("span_id", new_span)
+        .withColumn("baggage", F.create_map(F.lit("messageid"), messageid))
+        .withColumn(
+            "headers",
+            _spec_put_header(_spec_put_header(F.col("headers"), "b3", b3), "messageid", messageid),
+        )
+    )
+
+
+def _edge_records(spark):
+    """Golden records plus a NULL-headers row and a duplicate-``b3`` row."""
+    import datetime
+
+    golden = numbers_fixture(spark, [1, 2, 3, 8], trace_id=TRACE)
+    ts = datetime.datetime(2024, 1, 2)
+    extra = spark.createDataFrame(
+        [
+            ("null-headers", 5, "numbers", 0, 10, ts, None),
+            (
+                "dup-b3",
+                6,
+                "numbers",
+                0,
+                11,
+                ts,
+                [("b3", b"aaaa-1111-0"), ("other", b"x"), ("b3", f"{TRACE}-0006-1".encode())],
+            ),
+        ],
+        RECORD_SCHEMA,
+    )
+    return golden.unionByName(extra)
+
+
+#: id -> () -> (rewritten helper, Column-DSL spec); Columns need a live session.
+FRAGMENT_CASES = {
+    "trace_id_for": lambda: (T.trace_id_for("`offset`"), _spec_trace_id_for(F.col("offset"))),
+    "span_id_for": lambda: (T.span_id_for("value"), _spec_span_id_for(F.col("value"))),
+    "child_span_id": lambda: (
+        T.child_span_id("key", "set", "`offset`"),
+        _spec_child_span_id(F.col("key"), "set", F.col("offset")),
+    ),
+    "b3_single_header": lambda: (
+        T.b3_single_header("key", "cast(value as string)"),
+        _spec_b3_single_header(F.col("key"), F.col("value").cast("string")),
+    ),
+    "b3_single_header(unsampled)": lambda: (
+        T.b3_single_header("key", "key", False),
+        _spec_b3_single_header(F.col("key"), F.col("key"), False),
+    ),
+    "b3_single_header(expr)": lambda: (
+        T.b3_single_header("key", "key", "value > 2"),
+        _spec_b3_single_header(F.col("key"), F.col("key"), F.col("value") > 2),
+    ),
+    "parse_b3": lambda: (
+        T.parse_b3(H.header_value_str_sql("headers", "b3")),
+        _spec_parse_b3(_spec_header_value_str(F.col("headers"), "b3")),
+    ),
+    "last_header": lambda: (
+        H.last_header("headers", "b3"),
+        _spec_last_header(F.col("headers"), "b3"),
+    ),
+    "header_value_str": lambda: (
+        H.header_value_str("headers", "b3"),
+        _spec_header_value_str(F.col("headers"), "b3"),
+    ),
+    "put_header": lambda: (
+        H.put_header("headers", "b3", "cast(value as string)"),
+        _spec_put_header(F.col("headers"), "b3", F.col("value").cast("string")),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(FRAGMENT_CASES))
+def test_fragment_matches_column_dsl_spec(spark, case):
+    got, want = FRAGMENT_CASES[case]()
+    df = _edge_records(spark).select("offset", got.alias("got"), want.alias("want"))
+    assert df.schema["got"].dataType == df.schema["want"].dataType
+    rows = df.orderBy("offset").collect()
+    assert len(rows) == 6
+    for r in rows:
+        assert r.got == r.want, r.offset
+
+
+def test_enrich_trace_matches_column_dsl_spec(spark):
+    recs = _edge_records(spark)
+    got = enrich_trace(recs)
+    want = _spec_enrich_trace(recs)
+    # headers moved after the trace columns (it reads them); values do not
+    assert sorted(got.columns) == sorted(want.columns)
+    assert got.schema.fields[-1].name == "headers"
+    got = got.select(want.columns)
+    assert got.schema == want.schema
+    assert got.orderBy("offset").collect() == want.orderBy("offset").collect()
+
+
+def test_enrich_trace_twice_chains_spans(spark):
+    """Re-enriching an enriched frame replaces its trace columns, as the
+    chained withColumns did: the new span's parent is the first span."""
+    recs = numbers_fixture(spark, [4], trace_id=TRACE)
+    first = enrich_trace(recs).collect()[0]
+    second = enrich_trace(enrich_trace(recs), "send")
+    assert second.columns.count("span_id") == 1
+    row = second.select(
+        "trace_id", "parent_span_id", "span_id", header_value_str("headers", "b3").alias("b3")
+    ).collect()[0]
+    assert row.trace_id == TRACE
+    assert row.parent_span_id == first.span_id
+    assert row.span_id == hashlib.md5(f"{TRACE}:send:0".encode()).hexdigest()[:16]
+    assert row.b3 == f"{TRACE}-{row.span_id}-1"
+
+
+# --- literal quoting ---------------------------------------------------------
+
+QUOTED = ["it's", "a\\b", "'", "\\'", "o'neil\\x"]
+
+
+@pytest.mark.parametrize("text", QUOTED)
+def test_sql_str_round_trips(spark, text):
+    assert spark.range(1).selectExpr(f"{T.sql_str(text)} AS v").first().v == text
+
+
+def test_quoted_stage_and_header_names(spark):
+    recs = numbers_fixture(spark, [3], trace_id=TRACE)
+    stage, name, prefix = "it's", "o'neil\\x", "o'neil"
+    headers = H.put_header_sql(H.put_header_sql("headers", name, "'v1'"), prefix, "'v2'")
+    row = recs.select(
+        T.child_span_id("key", stage, "`offset`").alias("span"),
+        H.header_value_str(headers, name).alias("v1"),
+        H.header_value_str(headers, prefix).alias("v2"),
+        F.expr(f"transform({headers}, h -> h.key)").alias("keys"),
+    ).collect()[0]
+    assert row.span == hashlib.md5(f"test-key:{stage}:0".encode()).hexdigest()[:16]
+    assert (row.v1, row.v2) == ("v1", "v2")
+    assert row.keys == ["b3", name, prefix]
