@@ -6,9 +6,11 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "n_failed": K, "sf": "..."}
 
 A query that raises (in the warm-up or a measured pass) is recorded and
-the run goes on: ``n_failed`` counts such queries, their first errors are
-printed to stderr and kept under ``errors`` in the detail file, and the
-totals cover the runs that succeeded.
+the run goes on: ``n_failed`` counts such queries, and their first errors
+are printed to stderr and kept under ``errors`` in the detail file. A
+total over fewer queries is not comparable with a full one, so when any
+query failed ``value`` is null and the script exits with status 1;
+``n_queries`` and ``max_sec`` still describe the queries that succeeded.
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver collect overhead).  A warmup pass at the SAME scale factor runs
@@ -89,6 +91,19 @@ def measure(spark, registry: dict, sf_dir: str) -> tuple[dict[str, float], dict[
     return timings, errors
 
 
+def summary(timings: dict[str, float], errors: dict[str, str]) -> dict:
+    """The run's headline fields; ``value`` is None unless every query
+    succeeded, so a partial total never passes for a full one."""
+    return {
+        "metric": "total_query_sec",
+        "value": None if errors else round(sum(timings.values()), 3),
+        "unit": "sec",
+        "n_queries": len(timings),
+        "max_sec": max(timings.values()) if timings else 0.0,
+        "n_failed": len(errors),
+    }
+
+
 def main() -> None:
     from logflow.queries import load_all
     from logflow.session import get_spark
@@ -103,7 +118,7 @@ def main() -> None:
 
     timings, errors = measure(spark, registry, SF_DIR)
 
-    total = round(sum(timings.values()), 3)
+    head = summary(timings, errors)
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
     # The driver captures only the tail of stdout (~2 KB): print a compact
     # summary line ("queries" = slowest 5 only) and write the full
@@ -114,19 +129,14 @@ def main() -> None:
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), detail_name)
     with open(detail_path, "w") as fh:
         json.dump(
-            {"metric": "total_query_sec", "value": total, "unit": "sec",
+            {"metric": "total_query_sec", "value": head["value"], "unit": "sec",
              "queries": timings, "errors": errors, "sf": SF_DIR},
             fh, indent=1, sort_keys=True,
         )
     print(
         json.dumps(
             {
-                "metric": "total_query_sec",
-                "value": total,
-                "unit": "sec",
-                "n_queries": len(timings),
-                "max_sec": max(timings.values()) if timings else 0.0,
-                "n_failed": len(errors),
+                **head,
                 "queries": slowest,
                 "detail": detail_name,
                 "sf": SF_DIR,
@@ -134,6 +144,8 @@ def main() -> None:
             }
         )
     )
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -666,12 +666,20 @@ def graph_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BFS_HOPS = 3
 _BFS_SEEDS = 5
-#: Row bound for broadcasting BFS's visited set into the per-hop anti join.
-#: The set is one bigint column, built into a hashed relation and shipped
-#: to every task each hop: ~16 B per row, so the bound caps that at
-#: ~16 MB. At or above it the anti join carries no hint and Spark picks its
-#: strategy from size estimates (a shuffled join at scale).
-_BFS_BROADCAST_MAX_ROWS = 1_000_000
+#: Bytes per row of BFS's visited set (one bigint key) once built into the
+#: broadcast hashed relation. Measured as the BroadcastExchange "data size"
+#: metric of a left anti join on pyspark 4.1: 4.8 MiB at 100k and 39.6 MiB
+#: at 1M dense keys, 8.0 MiB at 100k and 64.0 MiB at 1M sparse keys (ids
+#: 7919 apart); this is the largest, 100k sparse. Not measured above 1M rows.
+_BFS_VISITED_ROW_BYTES = 84
+
+
+def _bfs_visited_broadcastable(spark: SparkSession, n_visited: int) -> bool:
+    """Whether a visited set of ``n_visited`` rows fits the session's own
+    broadcast policy: its estimated hashed-relation size is at most
+    spark.sql.autoBroadcastJoinThreshold (never, when that is negative)."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= n_visited * _BFS_VISITED_ROW_BYTES <= threshold
 
 
 def _bfs_level_ctes() -> str:
@@ -746,9 +754,10 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # broadcast the frontier/visited sets so the persisted edge table
         # streams map-side instead of shuffling per hop (r13 A/B: wins
         # every interleaved pair, ~3.9 -> ~3.3 s at sf0.1; the
-        # betweenness lesson). The visited set only grows, so its hint
-        # holds only below _BFS_BROADCAST_MAX_ROWS (exact running count).
-        seen = F.broadcast(visited) if n_visited < _BFS_BROADCAST_MAX_ROWS else visited
+        # betweenness lesson). The visited set only grows, so it keeps its
+        # hint only while its exact running count fits the broadcast
+        # threshold; above it Spark picks the anti join's strategy itself.
+        seen = F.broadcast(visited) if _bfs_visited_broadcastable(spark, n_visited) else visited
         nxt = (
             edges.join(F.broadcast(frontier), "u")
             .select(F.col("v").alias("u"))

@@ -13,19 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logflow.functions.headers import header_value_str_sql
-from logflow.functions.trace import sql_str
-from logflow.model import TOPIC_EVEN, TOPIC_ODD
 from logflow.operators.topology import (
-    EVEN_BRANCH,
     MESSAGEID,
-    PARENT_SPAN_ID,
     TRACE_ID,
     enrich_trace,
     logs_from_records,
     rewrite_remote_service,
     route_even_odd,
     spans_from_records,
-    stage_span_sql,
 )
 from logflow.queries import register
 from logflow.sources.records import records_from_events
@@ -95,17 +90,16 @@ def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _route(spark: SparkSession, sf_dir: str, even: bool) -> DataFrame:
-    # enrich_trace + route_even_odd + the projection, as one filter and one
-    # projection (span_id reads trace_id as a lateral alias).
-    pred, topic = (EVEN_BRANCH, TOPIC_EVEN) if even else (f"NOT {EVEN_BRANCH}", TOPIC_ODD)
-    return _records(spark, sf_dir).filter(pred).selectExpr(
+    even_df, odd_df = route_even_odd(enrich_trace(_records(spark, sf_dir)))
+    df = even_df if even else odd_df
+    return df.selectExpr(
         "key",
         "value",
-        f"{sql_str(topic)} AS topic",
-        f"{TRACE_ID} AS trace_id",
-        f"{PARENT_SPAN_ID} AS parent_span_id",
-        f"{stage_span_sql('set')} AS span_id",
-        f"{MESSAGEID} AS messageid",
+        "topic",
+        "trace_id",
+        "parent_span_id",
+        "span_id",
+        "baggage['messageid'] AS messageid",
     )
 
 
@@ -303,8 +297,7 @@ FROM records WHERE value % 2 = 0
     "header plumbing is correct.",
 )
 def trace_baggage_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the even branch of route_even_odd; its topic stamp is not read
-    even = enrich_trace(_records(spark, sf_dir)).filter(EVEN_BRANCH)
+    even, _ = route_even_odd(enrich_trace(_records(spark, sf_dir)))
     propagated = f"{header_value_str_sql('headers', 'messageid')} = {MESSAGEID}"
     return even.selectExpr(
         "count(1) AS n_even",

@@ -35,3 +35,17 @@ def test_measure_records_errors_and_keeps_going(spark, sf_dir, capsys):
     assert set(errors) == {"bad", "flaky"}
     err = capsys.readouterr().err
     assert "[bench] bad failed" in err and "[bench] flaky failed" in err
+
+
+def test_summary_withholds_partial_total():
+    import bench
+
+    timings = {"good": 0.5, "flaky": 1.25}
+    full = bench.summary(timings, {})
+    assert full["value"] == 1.75 and full["n_failed"] == 0
+    partial = bench.summary(timings, {"bad": "measured: RuntimeError: x"})
+    # a run that lost a query reports no total, only the count that failed
+    assert partial["value"] is None
+    assert partial["n_failed"] == 1
+    assert partial["n_queries"] == 2 and partial["max_sec"] == 1.25
+    assert set(partial) == set(full)

@@ -744,10 +744,11 @@ def test_louvain_refine_without_pinned_threads(spark, duck, sf_dir, monkeypatch)
 
 
 def test_bfs_visited_broadcast_falls_back_above_bound(spark, duck, sf_dir, monkeypatch):
-    """BFS hints its visited set for broadcast only below
-    _BFS_BROADCAST_MAX_ROWS; with the bound patched to 0 every hop takes
-    the plain anti join (one broadcast per hop, the frontier's, instead
-    of two) and the levels still match the oracle."""
+    """BFS hints its visited set for broadcast only while its estimated
+    hashed-relation size fits spark.sql.autoBroadcastJoinThreshold. With
+    the threshold set to the seeds' size, only the first hop hints the
+    visited set (every hop still hints its frontier); with broadcasts off
+    no hop hints it. The levels match the oracle either way."""
     from pyspark.sql import functions as F
 
     from logflow.operators.cache import release_all
@@ -765,10 +766,19 @@ def test_bfs_visited_broadcast_falls_back_above_bound(spark, duck, sf_dir, monke
     fn = load_all()["graph_bfs_levels"].fn
     fn(spark, sf_dir).collect()
     release_all()
-    hinted = len(calls)
+    hops = len(calls) // 2
+    assert hops > 1 and len(calls) == 2 * hops  # frontier + visited per hop
 
-    monkeypatch.setattr(graph, "_BFS_BROADCAST_MAX_ROWS", 0)
-    calls.clear()
-    check_query(spark, duck, "graph_bfs_levels", sf_dir)
-    assert hinted > 0
-    assert len(calls) * 2 == hinted
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    try:
+        for threshold, visited_hints in [
+            (graph._BFS_VISITED_ROW_BYTES * graph._BFS_SEEDS, 1),
+            (-1, 0),
+        ]:
+            spark.conf.set(key, str(threshold))
+            calls.clear()
+            check_query(spark, duck, "graph_bfs_levels", sf_dir)
+            assert len(calls) == hops + visited_hints, (threshold, len(calls))
+    finally:
+        spark.conf.set(key, before)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import gc
 import hashlib
+import threading
 
 import pytest
 from pyspark.sql import Column
@@ -160,9 +161,10 @@ def test_wire_frame_bytes_matches_python_reference_framing(spark):
 
 # --- plan-build cost: Py4J round trips -------------------------------------
 
-#: Round trips to build each query (q.fn only, warm schema cache) before the
-#: trace helpers emitted SQL text; the budget is 40 % of these.
-PARENT_ROUND_TRIPS = {"trace_tree_edges": 773, "trace_route_even": 747}
+#: Round trips to build each query (q.fn only, warm schema cache, measured
+#: as below) before the trace helpers emitted SQL text; the budget is 40 %
+#: of these.
+PARENT_ROUND_TRIPS = {"trace_tree_edges": 773, "trace_route_even": 536}
 
 
 @pytest.mark.parametrize("name", sorted(PARENT_ROUND_TRIPS))
@@ -176,9 +178,13 @@ def test_build_round_trip_budget(spark, sf_dir, monkeypatch, name):
     client = spark.sparkContext._gateway._gateway_client
     real = client.send_command
     sent = []
+    builder = threading.current_thread()
 
     def counting(command, *args, **kwargs):
-        sent.append(command.split("\n", 1)[0])
+        # only the build's own calls: other threads (a finished stream's
+        # callback thread freeing its Java objects) share the client
+        if threading.current_thread() is builder:
+            sent.append(command.split("\n", 1)[0])
         return real(command, *args, **kwargs)
 
     gc.collect()
