@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Benchmark: run every registered query at $SPARK_GRAFT_SF_DIR.
 
+Usage: python bench.py [--shard i/n] [name ...]   (no arguments: all queries)
+
 Prints ONE JSON line:
   {"metric": "total_query_sec", "value": N, "unit": "sec",
    "queries": {name: sec, ...}, "n_failed": K, "sf": "..."}
@@ -33,48 +35,41 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _parse_shard(argv: list[str]) -> tuple[int, int]:
-    """`--shard i/n` runs every n-th registry query starting at i (0-based)
-    — mirrors tools/drivercheck.py sharding so close-of-round sweeps can
-    run as n parallel PROCESSES instead of one serial hour. Default 0/1
-    (the full registry; the driver's invocation is unchanged)."""
-    for a in argv:
+def _parse_args(argv: list[str]) -> tuple[int, int, list[str]]:
+    """`[--shard i/n] [name ...]`.  Names pick registry queries (all by
+    default) for a spot timing; `--shard i/n` then runs every n-th of them
+    starting at i (0-based) — mirrors tools/drivercheck.py sharding so
+    close-of-round sweeps can run as n parallel PROCESSES instead of one
+    serial hour. Default 0/1 and no names (the full registry, as a bare
+    `python bench.py` has always run)."""
+    shard, names = "0/1", []
+    args = iter(argv)
+    for a in args:
         if a.startswith("--shard"):
-            spec = a.split("=", 1)[1] if "=" in a else argv[argv.index(a) + 1]
-            i, n = spec.split("/")
-            return int(i), int(n)
-    return 0, 1
-
-
-def _run(spark, name: str, q, sf_dir: str, phase: str, errors: dict[str, str]) -> float | None:
-    """Run one query to the noop sink; its wall seconds, or None after
-    recording the first error per query in ``errors`` (and on stderr)."""
-    t0 = time.perf_counter()
-    try:
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    except Exception as exc:
-        lines = str(exc).strip().splitlines()
-        msg = f"{phase}: {type(exc).__name__}: {lines[0][:300] if lines else ''}"
-        errors.setdefault(name, msg)
-        print(f"[bench] {name} failed: {msg}", file=sys.stderr)
-        return None
-    return round(time.perf_counter() - t0, 3)
+            shard = a.split("=", 1)[1] if "=" in a else next(args)
+        else:
+            names.append(a)
+    i, n = shard.split("/")
+    return int(i), int(n), names
 
 
 def measure(spark, registry: dict, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
     """Warm-up pass, then two measured passes; per-query min seconds of
     the runs that succeeded, and the first error of every query that
     failed in any pass (one failure never stops the others)."""
-    from logflow.operators.cache import release_all
+    from tools.harness import run_each
+
+    def timed(name, q) -> float:
+        """Run one query to the noop sink; its wall seconds."""
+        t0 = time.perf_counter()
+        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
 
     errors: dict[str, str] = {}
     # Warmup at the measured SF (codegen classes + JIT are plan-shape
-    # specific); drop any caches a query materialized so the measured pass
-    # starts from a clean executor state.
-    for name, q in registry.items():
-        _run(spark, name, q, sf_dir, "warmup", errors)
-    release_all()
-    spark.catalog.clearCache()
+    # specific); every query's caches are dropped after it, so the
+    # measured pass starts from a clean executor state.
+    run_each(spark, registry, timed, errors, "bench", "warmup: ")
 
     # Two measured runs per query, report the min: the host shows bursty
     # noisy-neighbor interference (same query measured 1.3 s and 20 s
@@ -82,12 +77,8 @@ def measure(spark, registry: dict, sf_dir: str) -> tuple[dict[str, float], dict[
     # the standard robust estimator for the true cost under additive noise.
     timings: dict[str, float] = {}
     for _ in range(2):
-        for name, q in registry.items():
-            dt = _run(spark, name, q, sf_dir, "measured", errors)
-            if dt is not None:
-                timings[name] = min(timings.get(name, dt), dt)
-            release_all()
-            spark.catalog.clearCache()
+        for name, dt in run_each(spark, registry, timed, errors, "bench", "measured: ").items():
+            timings[name] = min(timings.get(name, dt), dt)
     return timings, errors
 
 
@@ -105,13 +96,13 @@ def summary(timings: dict[str, float], errors: dict[str, str]) -> dict:
 
 
 def main() -> None:
-    from logflow.queries import load_all
     from logflow.session import get_spark
+    from tools.harness import select
 
-    shard_i, shard_n = _parse_shard(sys.argv[1:])
+    shard_i, shard_n, names = _parse_args(sys.argv[1:])
+    registry = select(names)
     spark = get_spark(app_name="logflow-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    registry = load_all()
     if shard_n > 1:
         names = list(registry)[shard_i::shard_n]
         registry = {n: registry[n] for n in names}

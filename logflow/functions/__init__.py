@@ -1,32 +1,13 @@
 """Column-level building blocks (all built-in Catalyst expressions).
 
 Everything here compiles to JVM-side expressions inside whole-stage
-codegen — no Python UDFs on the hot path (SURVEY.md §4.2).
+codegen — no Python UDFs on the hot path (SURVEY.md §4.2).  The trace and
+header helpers (``trace``, ``headers``) are SQL text fragments, ``*_sql``.
 """
 
-from logflow.functions.trace import (
-    b3_single_header,
-    child_span_id,
-    parse_b3,
-    span_id_for,
-    trace_id_for,
-)
-from logflow.functions.headers import (
-    header_value_str,
-    last_header,
-    put_header,
-)
 from logflow.functions.codec import int_be_decode, int_be_encode
 
 __all__ = [
-    "b3_single_header",
-    "child_span_id",
-    "parse_b3",
-    "span_id_for",
-    "trace_id_for",
-    "header_value_str",
-    "last_header",
-    "put_header",
     "int_be_decode",
     "int_be_encode",
 ]

@@ -8,8 +8,8 @@ are last-wins, matching ``ConsumerRecord.headers().lastHeader(name)``
 
 All pure built-in higher-order functions — no UDFs.  As in
 logflow.functions.trace, each helper builds ONE Spark SQL expression
-string and the public Column helpers are ``F.expr`` wrappers: plan
-building is bound by Py4J round trips (about three per ``F.*`` call).
+string (``F.expr`` of it is the Column): plan building is bound by Py4J
+round trips (about three per ``F.*`` call).
 Measured on a 4-vCPU host (pyspark 4.1, warm), the Column-DSL
 ``header_value_str`` took 36 round trips (12 ms) and ``put_header`` 53
 (9.6 ms); as text each is one ``F.expr``, 3 round trips (1.3-1.4 ms).
@@ -19,38 +19,26 @@ are literals quoted by ``sql_str``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from logflow.functions.trace import sql_str
 
 
 def last_header_sql(headers: str, name: str) -> str:
-    return f"element_at(filter({headers}, h -> h.key = {sql_str(name)}), -1).value"
+    """Binary value of the LAST header with the given key (Kafka
+    lastHeader); NULL when no header has the key or the array is NULL.
+    ``try_element_at``: under ANSI mode (Spark 4's default) ``element_at``
+    raises on the empty filtered array instead of returning NULL."""
+    return f"try_element_at(filter({headers}, h -> h.key = {sql_str(name)}), -1).value"
 
 
 def header_value_str_sql(headers: str, name: str) -> str:
+    """Last header value decoded as UTF-8 string (NULL when absent)."""
     return f"cast({last_header_sql(headers, name)} as string)"
 
 
 def put_header_sql(headers: str, name: str, value: str) -> str:
-    entry = f"array(struct({sql_str(name)} AS key, encode({value}, 'utf-8') AS value))"
-    return f"CASE WHEN {headers} IS NULL THEN {entry} ELSE concat({headers}, {entry}) END"
-
-
-def last_header(headers: str, name: str) -> Column:
-    """Binary value of the LAST header with the given key (Kafka lastHeader)."""
-    return F.expr(last_header_sql(headers, name))
-
-
-def header_value_str(headers: str, name: str) -> Column:
-    """Last header value decoded as UTF-8 string (NULL when absent)."""
-    return F.expr(header_value_str_sql(headers, name))
-
-
-def put_header(headers: str, name: str, value: str) -> Column:
     """Append a header whose value is a string expression, encoded UTF-8.
 
     Duplicates allowed — appending is how Kafka producers add headers;
     last-wins on read."""
-    return F.expr(put_header_sql(headers, name, value))
+    entry = f"array(struct({sql_str(name)} AS key, encode({value}, 'utf-8') AS value))"
+    return f"CASE WHEN {headers} IS NULL THEN {entry} ELSE concat({headers}, {entry}) END"

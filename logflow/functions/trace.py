@@ -21,16 +21,13 @@ Measured on a 4-vCPU host (pyspark 4.1, warm), the Column-DSL
 ``parse_b3(header_value_str(...))`` 86 (19 ms), while the same expressions
 sent as one ``F.expr`` take 3 round trips (1.5 ms); the JVM parses the
 text in about a millisecond. So the ``*_sql`` functions compose SQL text:
-arguments are SQL expressions (a plain column name is one), literal names
-go through :func:`sql_str`, and each public Column helper is a thin
-``F.expr`` wrapper over its fragment. Operators splice the fragments into
-``selectExpr`` lists (logflow.operators.topology).
+arguments are SQL expressions (a plain column name is one) and literal
+names go through :func:`sql_str`. Operators splice the fragments into
+``selectExpr`` lists (logflow.operators.topology); a caller that wants a
+Column takes ``F.expr(<fragment>)``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 TRACE_ID_HEX = 32
 SPAN_ID_HEX = 16
@@ -47,14 +44,22 @@ def sql_str(value: str) -> str:
 
 
 def trace_id_sql(seed: str) -> str:
+    """128-bit (32 hex) deterministic trace id from a seed expression."""
     return f"md5(concat('trace:', cast({seed} as string)))"
 
 
 def span_id_sql(seed: str) -> str:
+    """64-bit (16 hex) deterministic root span id from a seed expression."""
     return f"substring(md5(concat('span:', cast({seed} as string))), 1, {SPAN_ID_HEX})"
 
 
 def child_span_id_sql(trace_id: str, stage: str, offset: str) -> str:
+    """New child span id for an instrumented stage.
+
+    Same trace_id + distinct stage name + record offset → unique, stable id
+    per (record, stage); mirrors Brave's child-span-per-stage behavior
+    (reference StreamsConfig.java:32-45) minus the RNG.
+    """
     return (
         f"substring(md5(concat_ws(':', {trace_id}, {sql_str(stage)}, "
         f"cast({offset} as string))), 1, {SPAN_ID_HEX})"
@@ -62,6 +67,10 @@ def child_span_id_sql(trace_id: str, stage: str, offset: str) -> str:
 
 
 def b3_single_header_sql(trace_id: str, span_id: str, sampled: str | bool = True) -> str:
+    """Encode the single-header B3 wire format ``{traceId}-{spanId}-{0|1}``.
+
+    ``sampled`` is a boolean SQL expression or a Python constant.
+    """
     flag = (
         f"CASE WHEN {sampled} THEN '1' ELSE '0' END"
         if isinstance(sampled, str)
@@ -82,43 +91,11 @@ def b3_fields_sql(b3: str) -> dict[str, str]:
 
 
 def parse_b3_sql(b3: str) -> str:
-    fields = ", ".join(f"{sql} AS {name}" for name, sql in b3_fields_sql(b3).items())
-    return f"struct({fields})"
-
-
-def trace_id_for(seed: str) -> Column:
-    """128-bit (32 hex) deterministic trace id from a seed expression."""
-    return F.expr(trace_id_sql(seed))
-
-
-def span_id_for(seed: str) -> Column:
-    """64-bit (16 hex) deterministic root span id from a seed expression."""
-    return F.expr(span_id_sql(seed))
-
-
-def child_span_id(trace_id: str, stage: str, offset: str) -> Column:
-    """New child span id for an instrumented stage.
-
-    Same trace_id + distinct stage name + record offset → unique, stable id
-    per (record, stage); mirrors Brave's child-span-per-stage behavior
-    (reference StreamsConfig.java:32-45) minus the RNG.
-    """
-    return F.expr(child_span_id_sql(trace_id, stage, offset))
-
-
-def b3_single_header(trace_id: str, span_id: str, sampled: str | bool = True) -> Column:
-    """Encode the single-header B3 wire format ``{traceId}-{spanId}-{0|1}``.
-
-    ``sampled`` is a boolean SQL expression or a Python constant.
-    """
-    return F.expr(b3_single_header_sql(trace_id, span_id, sampled))
-
-
-def parse_b3(b3: str) -> Column:
     """Decode a single-header B3 string into the trace-context struct.
 
     Returns struct(trace_id, span_id, parent_span_id=NULL, sampled).
     parent_span_id is NULL at decode time — the consumed span becomes the
     parent of the first locally created child span.
     """
-    return F.expr(parse_b3_sql(b3))
+    fields = ", ".join(f"{sql} AS {name}" for name, sql in b3_fields_sql(b3).items())
+    return f"struct({fields})"

@@ -105,10 +105,10 @@ WHERE substr(trace_id, 1, 2) < '1a'
     "scale-correct way to sample a distributed trace stream",
 )
 def trace_hash_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from logflow.functions.trace import trace_id_for
+    from logflow.functions.trace import trace_id_sql
 
     ev = load_table(spark, "events", sf_dir)
-    sampled = ev.select("event_id", trace_id_for("event_id").alias("trace_id")).filter(
+    sampled = ev.select("event_id", F.expr(trace_id_sql("event_id")).alias("trace_id")).filter(
         F.substring("trace_id", 1, 2) < "1a"
     )
     return sampled.agg(

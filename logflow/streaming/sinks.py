@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logflow.functions.codec import int_be_encode
-from logflow.functions.headers import put_header
+from logflow.functions.headers import put_header_sql
 from logflow.functions.trace import b3_single_header_sql
 
 
@@ -39,7 +39,7 @@ def kafka_wire_frame(
     out = records.select(
         F.encode("key", "UTF-8").alias("key"),
         int_be_encode("value").alias("value"),
-        put_header("headers", "b3", b3).alias("headers"),
+        F.expr(put_header_sql("headers", "b3", b3)).alias("headers"),
     )
     if topic is not None:
         out = out.withColumn("topic", F.lit(topic))

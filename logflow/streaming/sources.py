@@ -52,7 +52,7 @@ def file_record_stream(spark: SparkSession, path: str) -> DataFrame:
 
 def rate_record_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
     """Synthetic record stream from the rate source (load/perf testing)."""
-    from logflow.functions.headers import put_header
+    from logflow.functions.headers import put_header_sql
     from logflow.functions.trace import b3_single_header_sql, span_id_sql, trace_id_sql
 
     rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
@@ -63,9 +63,11 @@ def rate_record_stream(spark: SparkSession, rows_per_second: int = 100) -> DataF
         F.lit(0).alias("partition"),
         F.col("value").alias("offset"),
         F.col("timestamp").alias("ts"),
-        put_header(
-            "cast(NULL as array<struct<key:string,value:binary>>)",
-            "b3",
-            b3_single_header_sql(trace_id_sql("value"), span_id_sql("value")),
+        F.expr(
+            put_header_sql(
+                "cast(NULL as array<struct<key:string,value:binary>>)",
+                "b3",
+                b3_single_header_sql(trace_id_sql("value"), span_id_sql("value")),
+            )
         ).alias("headers"),
     )

@@ -5,7 +5,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -24,13 +23,9 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_TEST}/{t}.parquet')"
-        )
+    from tests.oracle import duck_views
+
+    con = duck_views(SF_TEST)
     yield con
     con.close()
 

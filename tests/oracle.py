@@ -1,15 +1,18 @@
 """Local replica of the driver's Spark-vs-DuckDB comparison.
 
-Runs a registered query on Spark and its oracle SQL on DuckDB, normalizes
-both results (columns sorted by name, rows sorted by all columns, dtypes
-coerced), and compares values.  Catching a mismatch here means catching it
-before the driver's CORRECTNESS gate does.
+Runs a registered query on Spark and its oracle SQL on DuckDB, requires
+each column's dtype class (int, float, decimal, string, timestamp, bool)
+to match, normalizes both results (columns sorted by name, rows sorted by
+all columns, dtypes coerced), and compares values.  Catching a mismatch
+here means catching it before the CORRECTNESS gate does.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+
+from perfbench.check import dtype_class
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -40,6 +43,11 @@ def compare_frames(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str = 
     assert len(spark_pdf) == len(duck_pdf), (
         f"{name}: row count {len(spark_pdf)} vs {len(duck_pdf)}"
     )
+    # The gate hashes typed values: an int column never equals a float one,
+    # however equal the numbers (the rule perfbench.check.compare applies).
+    for c in sorted(spark_pdf.columns):
+        got, want = dtype_class(spark_pdf[c]), dtype_class(duck_pdf[c])
+        assert got == want or "null" in (got, want), f"{name}: column {c!r} dtype class {got} vs {want}"
     a, b = _normalize(spark_pdf), _normalize(duck_pdf)
     for c in a.columns:
         av, bv = a[c], b[c]
@@ -53,6 +61,19 @@ def compare_frames(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str = 
                 f"{name}: column {c!r} differs at sorted-row {bad}: "
                 f"spark={av.iloc[bad]!r} duck={bv.iloc[bad]!r}"
             )
+
+
+def duck_views(sf_dir: str):
+    """A DuckDB connection with one view per testdata table over ``sf_dir``'s
+    parquet files — the tables every oracle SQL reads."""
+    import duckdb
+
+    from logflow.model import TESTDATA_TABLES
+
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
 
 
 def check_query(spark, duck, name: str, sf_dir: str) -> None:

@@ -550,7 +550,7 @@ def test_kafka_wire_frame_roundtrip(spark, record_dir):
     decode back — key utf8, value 4-byte BE int, b3 header re-encoded from
     the current (child) span context."""
     from logflow.functions.codec import int_be_decode
-    from logflow.functions.headers import header_value_str
+    from logflow.functions.headers import header_value_str_sql
     from logflow.streaming.sinks import kafka_wire_frame
 
     enriched = enrich_trace(spark.read.parquet(record_dir))
@@ -562,7 +562,7 @@ def test_kafka_wire_frame_roundtrip(spark, record_dir):
     decoded = wire.select(
         F.col("key").cast("string").alias("key"),
         int_be_decode("value").alias("value"),
-        header_value_str("headers", "b3").alias("b3"),
+        F.expr(header_value_str_sql("headers", "b3")).alias("b3"),
         "topic",
     ).collect()
     src = {r.value: r for r in enriched.collect()}

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from logflow.functions import headers as H
 from logflow.functions import trace as T
-from logflow.functions.headers import header_value_str
+from logflow.functions.headers import header_value_str_sql
 from logflow.model import RECORD_SCHEMA
 from logflow.operators.branch import branch
 from logflow.operators.topology import enrich_trace, route_even_odd, spans_from_records
@@ -47,7 +47,7 @@ def test_b3_header_same_trace_new_span(spark):
     # StreamsConfigTest.java:64-66: b3 startsWith(traceId), spanId changed.
     even, _ = _route(spark, [1, 2, 3])
     row = even.select(
-        header_value_str("headers", "b3").alias("b3"),
+        F.expr(header_value_str_sql("headers", "b3")).alias("b3"),
         "trace_id",
         "span_id",
         "parent_span_id",
@@ -64,7 +64,7 @@ def test_baggage_messageid_survives_to_sink(spark):
     # StreamsConfigTest.java:111: lastHeader("messageid") == "messageid_8".
     even, _ = _route(spark, [8])
     row = even.select(
-        header_value_str("headers", "messageid").alias("mid"),
+        F.expr(header_value_str_sql("headers", "messageid")).alias("mid"),
         F.col("baggage")["messageid"].alias("bag"),
     ).collect()[0]
     assert row.mid == "messageid_8"
@@ -294,38 +294,38 @@ def _edge_records(spark):
 
 #: id -> () -> (rewritten helper, Column-DSL spec); Columns need a live session.
 FRAGMENT_CASES = {
-    "trace_id_for": lambda: (T.trace_id_for("`offset`"), _spec_trace_id_for(F.col("offset"))),
-    "span_id_for": lambda: (T.span_id_for("value"), _spec_span_id_for(F.col("value"))),
+    "trace_id_for": lambda: (F.expr(T.trace_id_sql("`offset`")), _spec_trace_id_for(F.col("offset"))),
+    "span_id_for": lambda: (F.expr(T.span_id_sql("value")), _spec_span_id_for(F.col("value"))),
     "child_span_id": lambda: (
-        T.child_span_id("key", "set", "`offset`"),
+        F.expr(T.child_span_id_sql("key", "set", "`offset`")),
         _spec_child_span_id(F.col("key"), "set", F.col("offset")),
     ),
     "b3_single_header": lambda: (
-        T.b3_single_header("key", "cast(value as string)"),
+        F.expr(T.b3_single_header_sql("key", "cast(value as string)")),
         _spec_b3_single_header(F.col("key"), F.col("value").cast("string")),
     ),
     "b3_single_header(unsampled)": lambda: (
-        T.b3_single_header("key", "key", False),
+        F.expr(T.b3_single_header_sql("key", "key", False)),
         _spec_b3_single_header(F.col("key"), F.col("key"), False),
     ),
     "b3_single_header(expr)": lambda: (
-        T.b3_single_header("key", "key", "value > 2"),
+        F.expr(T.b3_single_header_sql("key", "key", "value > 2")),
         _spec_b3_single_header(F.col("key"), F.col("key"), F.col("value") > 2),
     ),
     "parse_b3": lambda: (
-        T.parse_b3(H.header_value_str_sql("headers", "b3")),
+        F.expr(T.parse_b3_sql(H.header_value_str_sql("headers", "b3"))),
         _spec_parse_b3(_spec_header_value_str(F.col("headers"), "b3")),
     ),
     "last_header": lambda: (
-        H.last_header("headers", "b3"),
+        F.expr(H.last_header_sql("headers", "b3")),
         _spec_last_header(F.col("headers"), "b3"),
     ),
     "header_value_str": lambda: (
-        H.header_value_str("headers", "b3"),
+        F.expr(H.header_value_str_sql("headers", "b3")),
         _spec_header_value_str(F.col("headers"), "b3"),
     ),
     "put_header": lambda: (
-        H.put_header("headers", "b3", "cast(value as string)"),
+        F.expr(H.put_header_sql("headers", "b3", "cast(value as string)")),
         _spec_put_header(F.col("headers"), "b3", F.col("value").cast("string")),
     ),
 }
@@ -362,7 +362,7 @@ def test_enrich_trace_twice_chains_spans(spark):
     second = enrich_trace(enrich_trace(recs), "send")
     assert second.columns.count("span_id") == 1
     row = second.select(
-        "trace_id", "parent_span_id", "span_id", header_value_str("headers", "b3").alias("b3")
+        "trace_id", "parent_span_id", "span_id", F.expr(header_value_str_sql("headers", "b3")).alias("b3")
     ).collect()[0]
     assert row.trace_id == TRACE
     assert row.parent_span_id == first.span_id
@@ -385,11 +385,53 @@ def test_quoted_stage_and_header_names(spark):
     stage, name, prefix = "it's", "o'neil\\x", "o'neil"
     headers = H.put_header_sql(H.put_header_sql("headers", name, "'v1'"), prefix, "'v2'")
     row = recs.select(
-        T.child_span_id("key", stage, "`offset`").alias("span"),
-        H.header_value_str(headers, name).alias("v1"),
-        H.header_value_str(headers, prefix).alias("v2"),
+        F.expr(T.child_span_id_sql("key", stage, "`offset`")).alias("span"),
+        F.expr(H.header_value_str_sql(headers, name)).alias("v1"),
+        F.expr(H.header_value_str_sql(headers, prefix)).alias("v2"),
         F.expr(f"transform({headers}, h -> h.key)").alias("keys"),
     ).collect()[0]
     assert row.span == hashlib.md5(f"test-key:{stage}:0".encode()).hexdigest()[:16]
     assert (row.v1, row.v2) == ("v1", "v2")
     assert row.keys == ["b3", name, prefix]
+
+
+# --- absent headers read as NULL (Kafka lastHeader returns null) ------------
+
+
+def _header_cases(spark):
+    """One record per way a header can be absent: other keys only, an
+    empty array, NULL headers."""
+    import datetime
+
+    ts = datetime.datetime(2024, 1, 3)
+    rows = [
+        ("other-keys", 1, "numbers", 0, 0, ts, [("messageid", b"m"), ("other", b"x")]),
+        ("empty", 2, "numbers", 0, 1, ts, []),
+        ("null", 3, "numbers", 0, 2, ts, None),
+    ]
+    return spark.createDataFrame(rows, RECORD_SCHEMA)
+
+
+def test_absent_header_reads_null(spark):
+    rows = _header_cases(spark).select(
+        "key",
+        F.expr(H.last_header_sql("headers", "b3")).alias("raw"),
+        F.expr(H.header_value_str_sql("headers", "b3")).alias("b3"),
+    ).collect()
+    assert {r.key: (r.raw, r.b3) for r in rows} == {
+        "other-keys": (None, None),
+        "empty": (None, None),
+        "null": (None, None),
+    }
+
+
+def test_enrich_trace_without_b3_gives_null_trace_id(spark):
+    rows = enrich_trace(_header_cases(spark)).select(
+        "key", "trace_id", "parent_span_id", "span_id", "headers"
+    ).collect()
+    assert len(rows) == 3
+    for r in rows:
+        assert r.trace_id is None and r.parent_span_id is None, r.key
+        assert r.span_id is not None
+        # the outgoing b3 still carries the stage's new span
+        assert dict((h.key, bytes(h.value)) for h in r.headers)["b3"] == f"{r.span_id}-1".encode()

@@ -14,7 +14,7 @@ default) and reports rows or the error. Use it on new queries that touch
 session state (conf set/restore, datasource registration, catalog tables,
 tmp-dir caches) before trusting a green parity sweep.
 
-Usage: python tools/drivercheck.py [sf_dir] [query ...]   (default: all)
+Usage: python tools/drivercheck.py [--jobs=N] [sf_dir] [name ...]   (default: all)
 """
 
 from __future__ import annotations
@@ -26,12 +26,12 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from tools.harness import parse_args  # noqa: E402
+
 _CHILD = """
 import sys; sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .appName("drivercheck").getOrCreate())
+from tools.harness import vanilla_spark
+spark = vanilla_spark(8)
 import __spark_entry__ as e
 df = e.queries()[{name!r}](spark, {sf_dir!r})
 print("DRIVERCHECK_ROWS", df.count())
@@ -62,8 +62,6 @@ def _check_one(name: str, sf_dir: str) -> tuple[str, bool, str]:
 def main() -> int:
     from concurrent.futures import ThreadPoolExecutor
 
-    from logflow.queries import load_all
-
     argv = sys.argv[1:]
     jobs = 1
     if argv and argv[0].startswith("--jobs="):
@@ -71,8 +69,8 @@ def main() -> int:
         # cuts the full-registry sweep from ~3 h to ~40 min
         jobs = int(argv[0].split("=", 1)[1])
         argv = argv[1:]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    names = argv[1:] or list(load_all())
+    sf_dir, queries = parse_args(argv)
+    names = list(queries)
     failures = []
     with ThreadPoolExecutor(max_workers=jobs) as pool:
         for name, ok, info in pool.map(lambda n: _check_one(n, sf_dir), names):

@@ -1,20 +1,18 @@
 #!/usr/bin/env python
 """Plan-quality audit: .explain() every registered query and flag smells.
 
-Checks per executed plan (AQE final or initial physical plan):
+Checks per physical plan (the formatted explain, read by
+tools/harness.py::plan_stats):
 
 * **cartesian**: CartesianProduct nodes — O(n·m) row explosion; only the
   explicitly bounded verification queries may contain one.
 * **bnlj**: BroadcastNestedLoopJoin — fine for tiny broadcast sides
   (range-band VALUES tables), a scale bug anywhere else.
-* **no-pushdown**: a parquet scan whose `PushedFilters` is empty while the
-  query filters on a scanned column (heuristic: plan has a Filter directly
-  above the scan).
-* **full-schema scan**: ReadSchema listing more than 2/3 of the table's
-  columns for queries that project fewer — column pruning failed.
+* **hof-in-filter**: a lambdafunction inside a Filter condition — usually
+  a pushed-down predicate that re-inlined a derived expression.
 * **python-row-udf**: BatchEvalPython (row-at-a-time Python UDF) — the
   slow path; only ArrowEvalPython / MapInPandas are acceptable.
-* **shuffle-count**: informational — number of Exchange nodes.
+* **shuffle-count**: informational — number of shuffle Exchange nodes.
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
 Writes a per-query report to stdout; exit 1 if a non-whitelisted smell is
@@ -24,10 +22,11 @@ found (so it can run as a CI gate).
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.harness import exit_status, parse_args, plan, plan_stats, run_each  # noqa: E402
 
 #: queries allowed to contain the listed smell, with the reason.
 WHITELIST: dict[str, dict[str, str]] = {
@@ -436,69 +435,56 @@ WHITELIST: dict[str, dict[str, str]] = {
 }
 
 
-def audit_plan(name: str, plan: str) -> list[tuple[str, str]]:
-    smells: list[tuple[str, str]] = []
-    if "CartesianProduct" in plan:
-        smells.append(("cartesian", "CartesianProduct node present"))
-    if "BroadcastNestedLoopJoin" in plan:
-        smells.append(("bnlj", "BroadcastNestedLoopJoin present"))
-    if "BatchEvalPython" in plan:
-        smells.append(("python-row-udf", "row-at-a-time Python UDF in plan"))
-    if re.search(r"Filter [^\n]*lambdafunction", plan):
-        smells.append(
-            (
-                "hof-in-filter",
-                "higher-order function inside a Filter condition — usually a "
-                "pushed-down predicate that re-inlined an expensive derived "
-                "expression below the scan/repartition",
-            )
-        )
-    n_exchanges = plan.count("Exchange")
-    if n_exchanges > 8:
-        smells.append(("shuffle-count", f"{n_exchanges} Exchange nodes"))
-    return smells
+def audit_plan(stats: dict) -> list[tuple[str, str]]:
+    """The smells of one plan, as predicates on its ``plan_stats``."""
+    nodes = stats["nodes"]
+    checks = [
+        ("cartesian", nodes["CartesianProduct"], "CartesianProduct node present"),
+        ("bnlj", nodes["BroadcastNestedLoopJoin"], "BroadcastNestedLoopJoin present"),
+        ("python-row-udf", nodes["BatchEvalPython"], "row-at-a-time Python UDF in plan"),
+        (
+            "hof-in-filter",
+            stats["hof_filters"],
+            "higher-order function inside a Filter condition — usually a "
+            "pushed-down predicate that re-inlined an expensive derived "
+            "expression below the scan/repartition",
+        ),
+        ("shuffle-count", nodes["Exchange"] > 8, f"{nodes['Exchange']} Exchange nodes"),
+    ]
+    return [(kind, detail) for kind, hit, detail in checks if hit]
 
 
-def main() -> int:
-    from logflow.queries import load_all
+def main(argv: list[str]) -> int:
     from logflow.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    sf_dir, queries = parse_args(argv)
     spark = get_spark(app_name="logflow-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    failures = 0
-    for name, q in load_all().items():
-        if only and name not in only:
-            continue
-        try:
-            df = q.fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # pragma: no cover - audit robustness
-            print(f"ERROR {name}: {exc}")
-            failures += 1
-            continue
-        smells = audit_plan(name, plan)
+    def audit(name, q) -> bool:
+        """Print the query's report; whether it has a non-whitelisted smell."""
+        stats = plan_stats(plan(q.fn(spark, sf_dir)))
         allowed = WHITELIST.get(name, {})
         flagged = []
-        for kind, detail in smells:
+        for kind, detail in audit_plan(stats):
             if kind in allowed:
                 continue
             if kind == "shuffle-count":
                 print(f"INFO {name}: {detail}")
                 continue
             flagged.append((kind, detail))
-        if flagged:
-            failures += 1
-            for kind, detail in flagged:
-                print(f"SMELL {name}: [{kind}] {detail}")
-        else:
-            exchanges = plan.count("Exchange")
-            pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
+        for kind, detail in flagged:
+            print(f"SMELL {name}: [{kind}] {detail}")
+        if not flagged:
+            exchanges, pushed = stats["nodes"]["Exchange"], len(stats["pushed_scans"])
             print(f"OK   {name}: exchanges={exchanges} scans_with_pushdown={pushed}")
-    return 1 if failures else 0
+        return bool(flagged)
+
+    errors: dict[str, str] = {}
+    smelly = any(run_each(spark, queries, audit, errors, "explain_audit").values())
+    failed = exit_status(errors)
+    return 1 if smelly else failed
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

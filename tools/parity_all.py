@@ -1,13 +1,16 @@
 #!/usr/bin/env python
-"""Full-registry DuckDB parity sweep at sf0.01 (the driver's gate scale).
+"""DuckDB parity sweep on a vanilla SparkSession (the correctness gate).
 
 The driver's correctness gate was observed to check only the first 50
 registered queries; this sweep runs EVERY registry entry — window and
 tail — against its oracle on a VANILLA SparkSession (no logflow.session
-factory, mirroring the driver) and writes PARITY_FULL.json at the repo
-root: {name: {"status": "pass"|"fail"|"rows_only", "rows": N, "err": ...}}.
+factory, mirroring the gate).  A whole-registry run writes
+PARITY_FULL.json at the repo root: {name: {"status": "pass"|"fail"|
+"rows_only", "rows": N, "err": ...}}.  Named queries are a spot check (a
+new or edited operator in seconds, or one shard of the sweep): their
+results are printed and no file is written.
 
-Usage: python tools/parity_all.py [sf_dir]   (default /root/testdata/sf0.01)
+Usage: python tools/parity_all.py [sf_dir] [name ...]   (default sf0.01)
 """
 
 from __future__ import annotations
@@ -16,70 +19,43 @@ import json
 import os
 import sys
 import time
-import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+from tools.harness import exit_status, parse_args, run_each, vanilla_spark  # noqa: E402
 
 
-def main() -> int:
-    import duckdb
-    from pyspark.sql import SparkSession
+def main(argv: list[str]) -> int:
+    from tests.oracle import compare_frames, duck_views
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir, queries = parse_args(argv)
+    spark = vanilla_spark(32)
+    duck = duck_views(sf_dir)
 
-    from logflow.operators.cache import release_all
-    from logflow.queries import load_all
-    from tests.oracle import compare_frames
+    def check(name, q):
+        spark_pdf = q.fn(spark, sf_dir).toPandas()
+        if q.oracle is not None:
+            compare_frames(spark_pdf, duck.execute(q.oracle).fetchdf(), name)
+        status = "rows_only" if q.oracle is None else "pass"
+        print(f"{status:9s} {name}", flush=True)
+        return {"status": status, "rows": len(spark_pdf), "err": None}
 
-    # vanilla session on purpose: replicates the driver environment
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("logflow-parity")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    duck = duckdb.connect()
-    for t in TABLES:
-        duck.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-
-    results: dict[str, dict] = {}
+    errors: dict[str, str] = {}
     t_start = time.perf_counter()
-    for name, q in load_all().items():
-        try:
-            spark_pdf = q.fn(spark, sf_dir).toPandas()
-            if q.oracle is None:
-                results[name] = {"status": "rows_only", "rows": len(spark_pdf), "err": None}
-            else:
-                duck_pdf = duck.execute(q.oracle).fetchdf()
-                compare_frames(spark_pdf, duck_pdf, name)
-                results[name] = {"status": "pass", "rows": len(spark_pdf), "err": None}
-        except Exception:
-            results[name] = {"status": "fail", "rows": None, "err": traceback.format_exc(limit=3)}
-        finally:
-            # Drop the query's tracked persists before moving on: 347
-            # queries' accumulated cached blocks otherwise exhaust the
-            # vanilla session's broadcast memory near the end of the
-            # sweep (ml_pca_power_iteration failed to broadcast a
-            # 64-float frame at sf0.1 in round 9 for exactly this
-            # reason — the driver runs one query per process and never
-            # sees the buildup).
-            release_all()
-            spark.catalog.clearCache()
-        print(f"{results[name]['status']:9s} {name}", flush=True)
-
-    n_pass = sum(1 for r in results.values() if r["status"] == "pass")
-    n_fail = sum(1 for r in results.values() if r["status"] == "fail")
-    n_rows = sum(1 for r in results.values() if r["status"] == "rows_only")
+    passed = run_each(spark, queries, check, errors, "parity_all")
+    failed = {n: {"status": "fail", "rows": None, "err": e} for n, e in errors.items()}
+    results = {**passed, **failed}
+    counts = {
+        s: sum(1 for r in results.values() if r["status"] == s) for s in ("pass", "fail", "rows_only")
+    }
+    print(f"\n{counts['pass']} pass / {counts['fail']} fail / {counts['rows_only']} rows-only")
+    if argv[1:]:
+        return exit_status(errors)
     summary = {
         "sf_dir": sf_dir,
         "n_queries": len(results),
-        "pass": n_pass,
-        "fail": n_fail,
-        "rows_only": n_rows,
+        **counts,
         "elapsed_sec": round(time.perf_counter() - t_start, 1),
         "results": results,
     }
@@ -91,9 +67,9 @@ def main() -> int:
     )
     with open(out, "w") as fh:
         json.dump(summary, fh, indent=1, sort_keys=True)
-    print(f"\n{n_pass} pass / {n_fail} fail / {n_rows} rows-only -> {out}")
-    return 1 if n_fail else 0
+    print(f"-> {out}")
+    return exit_status(errors)
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

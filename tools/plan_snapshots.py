@@ -7,7 +7,9 @@ Exchange count, pushed filters, read schemas, whole-stage-codegen spans,
 and any Python eval nodes (Arrow-batched only; BatchEvalPython would be a
 bug, see tools/explain_audit.py).
 
-Usage: python tools/plan_snapshots.py [sf_dir]
+Usage: python tools/plan_snapshots.py [sf_dir] [name ...]
+(default: every HEADLINERS query, written to PLANS.md; named queries are
+printed)
 """
 
 from __future__ import annotations
@@ -18,6 +20,8 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from tools.harness import GATE_SF_DIR, exit_status, plan, plan_stats, run_each, select  # noqa: E402
 
 #: queries worth showing, with a one-line scale story each.
 HEADLINERS: dict[str, str] = {
@@ -244,14 +248,49 @@ HEADLINERS: dict[str, str] = {
 }
 
 
-def main() -> int:
-    from logflow.queries import load_all
+def snapshot(spark, name: str, q, sf_dir: str) -> list[str]:
+    """The query's PLANS.md section: its story, plan_stats figures of the
+    AQE-final plan, and that plan's tree."""
+    df = q.fn(spark, sf_dir)
+    # collect() (not a noop write) so THIS DataFrame's QueryExecution
+    # runs and its executedPlan is the AQE-final one (isFinalPlan=true);
+    # a write wraps the plan in a fresh execution and leaves this one
+    # unadapted. Headliner results are all small.
+    df.collect()
+    stats = plan_stats(plan(df))
+    nodes = stats["nodes"]
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    # the adaptive toString prints "== Final Plan ==" then repeats the
+    # pre-adaptive tree under "== Initial Plan ==" — show only the final
+    # section (plan_stats skips the initial one too). Cut at the top-level
+    # marker: a cached frame's nested adaptive plan prints its own, earlier.
+    executed = re.split(r"^\+- == Initial Plan ==", executed, flags=re.M)[0].rstrip()
+    batched = nodes["ArrowEvalPython"] + nodes["MapInPandas"] + nodes["FlatMapGroupsInPandas"]
+    arrow = "yes" if batched else "no"
+    return [
+        f"## {name}",
+        "",
+        HEADLINERS.get(name, q.doc) + ".",
+        "",
+        f"- Exchange nodes: **{nodes['Exchange']}** · BroadcastExchange nodes: "
+        f"**{nodes['BroadcastExchange']}** · scans with pushed filters: "
+        f"**{len(stats['pushed_scans'])}** · whole-stage-codegen spans: "
+        f"**{nodes['WholeStageCodegen']}** · Arrow-batched Python: {arrow}",
+        "",
+        "```",
+        executed.rstrip()[:4000],
+        "```",
+        "",
+    ]
+
+
+def main(argv: list[str]) -> int:
     from logflow.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = argv[0] if argv else GATE_SF_DIR
+    queries = select(argv[1:] or list(HEADLINERS))
     spark = get_spark(app_name="logflow-plan-snapshots")
     spark.sparkContext.setLogLevel("ERROR")
-    registry = load_all()
 
     out = [
         "# PLANS — formatted physical plans of the headline queries",
@@ -259,50 +298,28 @@ def main() -> int:
         f"Generated by `python tools/plan_snapshots.py` at `{sf_dir}`. "
         "Plans are AQE-final (the query is executed, then its adapted plan "
         "is captured). "
-        "What to look for: `Exchange` count (shuffles), `PushedFilters` on "
-        "the parquet scans, `WholeStageCodegen` spans (JVM-compiled "
-        "pipelines), and the absence of `BatchEvalPython` (row-at-a-time "
-        "Python) anywhere.",
+        "What to look for: shuffle `Exchange` count, `BroadcastExchange` "
+        "count, `PushedFilters` on the parquet scans, `WholeStageCodegen` "
+        "spans (JVM-compiled pipelines), and the absence of `BatchEvalPython` "
+        "(row-at-a-time Python) anywhere. The counts are distinct plan nodes "
+        "(tools/harness.py::plan_stats).",
         "",
     ]
-    for name, story in HEADLINERS.items():
-        q = registry[name]
-        df = q.fn(spark, sf_dir)
-        # collect() (not a noop write) so THIS DataFrame's QueryExecution
-        # runs and its executedPlan is the AQE-final one (isFinalPlan=true);
-        # a write wraps the plan in a fresh execution and leaves this one
-        # unadapted. Headliner results are all small.
-        df.collect()
-        executed = df._jdf.queryExecution().executedPlan().toString()
-        # the adaptive toString prints "== Final Plan ==" then repeats the
-        # pre-adaptive tree under "== Initial Plan ==" — stat and show only
-        # the final section
-        executed = executed.split("== Initial Plan ==")[0].rstrip()
-        n_ex = executed.count("Exchange")
-        pushed = len(re.findall(r"PushedFilters: \[[^\]]", executed))
-        # codegen pipelines appear as "*(n) Operator" markers in the tree
-        codegen = len(set(re.findall(r"\*\((\d+)\)", executed)))
-        arrow = "yes" if re.search(r"MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas", executed) else "no"
-        out += [
-            f"## {name}",
-            "",
-            story + ".",
-            "",
-            f"- Exchange nodes: **{n_ex}** · scans with pushed filters: "
-            f"**{pushed}** · whole-stage-codegen spans: **{codegen}** · "
-            f"Arrow-batched Python: {arrow}",
-            "",
-            "```",
-            executed.rstrip()[:4000],
-            "```",
-            "",
-        ]
+    errors: dict[str, str] = {}
+    sections = run_each(
+        spark, queries, lambda n, q: snapshot(spark, n, q, sf_dir), errors, "plan_snapshots"
+    )
+    for lines in sections.values():
+        out += lines
+    if argv[1:]:  # a look at named plans, not the committed snapshot
+        print("\n".join(out))
+        return exit_status(errors)
     path = os.path.join(REPO, "PLANS.md")
     with open(path, "w") as fh:
         fh.write("\n".join(out))
-    print(f"wrote {path} ({len(HEADLINERS)} plans)")
-    return 0
+    print(f"wrote {path} ({len(sections)} plans)")
+    return exit_status(errors)
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

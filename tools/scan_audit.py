@@ -22,83 +22,46 @@ multi-reference relational queries (<=9 dups, <=1.5 s) mirror their
 oracle's own multi-scan shape. r13 re-run with Location keying: see
 OPTIMIZATION_r13.md.
 
-Usage: python tools/scan_audit.py [sf_dir] [min_dup]
+Usage: python tools/scan_audit.py [sf_dir] [name ...]
+Writes /tmp/scan_audit.json; the scan counts come from
+tools/harness.py::plan_stats.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
-import traceback
-from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.harness import exit_status, parse_args, plan, plan_stats, run_each, vanilla_spark  # noqa: E402
 
-def scan_counts(plan: str, min_dup: int) -> dict:
-    """Scan counts of one ``formatted`` plan string.
+#: A table read this many times in one plan is flagged.
+MIN_DUP = 3
 
-    Tree lines ("Scan parquet ... (N)") are the node's appearances in
-    the executed tree — re-embedded subtrees repeat the id.  Detail
-    headers ("(N) Scan parquet") carry the block with the Location:
-    path.  Duplicates are keyed on the Location so distinct tables are
-    never lumped (r12 ADVICE): dup[path] = total tree appearances of
-    every node id whose detail block points at that path.  Appearances
-    whose node has no parsable Location are counted in
-    ``unparsed_scans`` instead: they cannot be grouped by table, and a
-    non-zero count means the parser no longer matches the plan format.
-    ``total_scans`` = every tree appearance of a scan node."""
-    tree_ids = re.findall(r"Scan parquet[^\n(]*\((\d+)\)", plan)
-    loc_by_id: dict[str, str] = {}
-    for m in re.finditer(
-        r"^\((\d+)\) Scan parquet[^\n]*\n(.*?)(?=^\(\d+\) |\Z)",
-        plan,
-        re.M | re.S,
-    ):
-        lm = re.search(r"Location: [^\[\n]*\[([^\]]+)\]", m.group(2))
-        if lm:
-            loc_by_id[m.group(1)] = lm.group(1)
-    c = Counter(loc_by_id[nid] for nid in tree_ids if nid in loc_by_id)
+
+def scan_counts(stats: dict) -> dict:
+    """Scan counts of one plan's ``plan_stats``; ``dup`` keeps the tables
+    read at least MIN_DUP times."""
     return {
-        "total_scans": len(tree_ids),
-        "unparsed_scans": sum(1 for nid in tree_ids if nid not in loc_by_id),
-        "dup": {k: v for k, v in c.items() if v >= min_dup},
+        "total_scans": stats["total_scans"],
+        "unparsed_scans": stats["unparsed_scans"],
+        "dup": {k: v for k, v in stats["scans"].items() if v >= MIN_DUP},
     }
 
 
-def main() -> int:
-    from pyspark.sql import SparkSession
-
-    from logflow.operators.cache import release_all
-    from logflow.queries import load_all
-
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    min_dup = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("logflow-scan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-
-    out: dict[str, dict] = {}
+def main(argv: list[str]) -> int:
+    sf_dir, queries = parse_args(argv)
+    spark = vanilla_spark(8)
+    errors: dict[str, str] = {}
     t0 = time.time()
-    for name, q in load_all().items():
-        try:
-            df = q.fn(spark, sf_dir)
-            out[name] = scan_counts(df._jdf.queryExecution().explainString(mode), min_dup)
-        except Exception:
-            out[name] = {"err": traceback.format_exc()[-300:]}
-        release_all()
-        spark.catalog.clearCache()
+    def counts(name, q):
+        return scan_counts(plan_stats(plan(q.fn(spark, sf_dir))))
+
+    out = run_each(spark, queries, counts, errors, "scan_audit")
+    out.update({name: {"err": err} for name, err in errors.items()})
 
     flagged = sorted(
         ((max(v["dup"].values()), k) for k, v in out.items() if v.get("dup")),
@@ -111,8 +74,8 @@ def main() -> int:
     print(f"unparsed scan nodes (no Location): {unparsed}")
     with open("/tmp/scan_audit.json", "w") as fh:
         json.dump({"unparsed_scans": unparsed, "queries": out}, fh)
-    return 0
+    return exit_status(errors)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))
