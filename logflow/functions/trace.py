@@ -80,13 +80,21 @@ def b3_single_header_sql(trace_id: str, span_id: str, sampled: str | bool = True
 
 
 def b3_fields_sql(b3: str) -> dict[str, str]:
-    """The fields of ``parse_b3_sql(b3)`` in order, each without the struct."""
+    """The fields of ``parse_b3_sql(b3)`` in order, each without the struct.
+
+    A malformed header reads NULL fields instead of failing the batch:
+    under ANSI ``element_at`` past the end of the array raises, so the
+    parts are read with ``try_element_at``.  As in B3 single-header
+    parsing, a header of one part (``'1'``, or garbage such as ``'abc'``)
+    carries no trace context: NULL ``trace_id``, ``span_id`` and
+    ``sampled``.  A two-part header has NULL ``sampled``.
+    """
     parts = f"split({b3}, '-')"
     return {
-        "trace_id": f"element_at({parts}, 1)",
-        "span_id": f"element_at({parts}, 2)",
+        "trace_id": f"CASE WHEN size({parts}) > 1 THEN element_at({parts}, 1) END",
+        "span_id": f"try_element_at({parts}, 2)",
         "parent_span_id": "cast(NULL as string)",
-        "sampled": f"element_at({parts}, 3) = '1'",
+        "sampled": f"try_element_at({parts}, 3) = '1'",
     }
 
 

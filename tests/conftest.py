@@ -33,3 +33,29 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_TEST
+
+
+@pytest.fixture()
+def listing_jobs(spark):
+    """``run(action, threshold=None)``: run ``action`` and return the
+    descriptions of the distributed file-listing jobs it launched, read
+    from the SparkContext's status store.  ``threshold`` sets the session's
+    parallel-listing threshold for the action (restored after it)."""
+    from logflow.session import LISTING_THRESHOLD_CONF as conf
+    from perfbench.probe import StatusStore
+
+    store = StatusStore(spark)
+
+    def run(action, threshold: str | None = None) -> list[str]:
+        prev = spark.conf.get(conf)
+        if threshold is not None:
+            spark.conf.set(conf, threshold)
+        try:
+            start = store.mark()
+            action()
+            tags = store.job_tags(start, store.mark())
+        finally:
+            spark.conf.set(conf, prev)
+        return [d for _, d in tags if d and d.startswith("Listing leaf files and directories")]
+
+    return run

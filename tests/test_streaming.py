@@ -67,6 +67,39 @@ def test_streaming_branch_is_single_pass(spark, record_dir, tmp_path):
     assert set(seen["even"]).isdisjoint(seen["odd"])
 
 
+def test_micro_batch_over_40_files_launches_no_listing_job(spark, tmp_path, listing_jobs):
+    """The file source re-lists a micro-batch's files in getBatch; over
+    Spark's default threshold of 32 paths that was a job of one task per
+    file.  On a local master the session lists them on the driver."""
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "forty"
+    path.mkdir()
+    table = numbers_fixture(spark, list(range(40)), trace_id=TRACE).toArrow()
+    for i in range(40):
+        pq.write_table(table.slice(i, 1), str(path / f"part-{i:02d}.parquet"))
+    seen: list[int] = []
+
+    def drain(ckpt):
+        def run():
+            q = (
+                file_record_stream(spark, str(path))
+                .writeStream.foreachBatch(lambda df, _: seen.extend(r.value for r in df.collect()))
+                .option("checkpointLocation", str(tmp_path / ckpt))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+            assert q.exception() is None
+
+        return run
+
+    assert listing_jobs(drain("c1")) == []
+    # control: under Spark's default the micro-batch lists in a job
+    assert len(listing_jobs(drain("c2"), threshold="32")) >= 1
+    assert sorted(seen) == sorted(list(range(40)) * 2)
+
+
 def test_streaming_branch_sf001_matches_trace_routes(spark, tmp_path):
     """The reference topology (enrich -> branch -> dual sink) streamed over
     the full sf0.01 events fixture (~10k records) must produce exactly the

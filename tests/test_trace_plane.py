@@ -435,3 +435,45 @@ def test_enrich_trace_without_b3_gives_null_trace_id(spark):
         assert r.span_id is not None
         # the outgoing b3 still carries the stage's new span
         assert dict((h.key, bytes(h.value)) for h in r.headers)["b3"] == f"{r.span_id}-1".encode()
+
+
+# --- malformed b3 headers read NULL fields, never raise under ANSI ------------
+
+B3_CASES = [
+    # header -> (trace_id, span_id, parent_span_id, sampled)
+    ("abc", (None, None, None, None)),
+    ("", (None, None, None, None)),
+    ("1", (None, None, None, None)),  # sampling-only header: no context
+    (f"{TRACE}-0006", (TRACE, "0006", None, None)),
+    (f"{TRACE}-0006-1", (TRACE, "0006", None, True)),
+    (f"{TRACE}-0006-0-0005", (TRACE, "0006", None, False)),
+    (None, (None, None, None, None)),
+]
+
+
+def test_parse_b3_of_malformed_headers(spark):
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame([(i, h) for i, (h, _) in enumerate(B3_CASES)], "i int, b3 string")
+    rows = df.select("i", F.expr(T.parse_b3_sql("b3")).alias("ctx")).orderBy("i").collect()
+    assert [tuple(r.ctx) for r in rows] == [want for _, want in B3_CASES]
+
+
+def test_enrich_trace_with_malformed_b3(spark):
+    import datetime
+
+    ts = datetime.datetime(2024, 1, 4)
+    recs = spark.createDataFrame(
+        [
+            ("garbage", 1, "numbers", 0, 0, ts, [("b3", b"abc")]),
+            ("two-part", 2, "numbers", 0, 1, ts, [("b3", f"{TRACE}-0006".encode())]),
+        ],
+        RECORD_SCHEMA,
+    )
+    rows = {r.key: r for r in enrich_trace(recs).collect()}
+    garbage, two = rows["garbage"], rows["two-part"]
+    assert (garbage.trace_id, garbage.parent_span_id, garbage.sampled) == (None, None, None)
+    assert (two.trace_id, two.parent_span_id, two.sampled) == (TRACE, "0006", None)
+    for r in (garbage, two):
+        assert r.span_id is not None
+        b3 = dict((h.key, bytes(h.value)) for h in r.headers)["b3"]
+        assert b3 == "-".join(x for x in (r.trace_id, r.span_id, "1") if x).encode()

@@ -245,6 +245,41 @@ HEADLINERS: dict[str, str] = {
     "ts_holt_winters": "3-state recursion folded into literal weight "
     "vectors: two rollups then pure per-row codegen expressions — no "
     "fold, no window, no extra shuffle",
+    "seq_prefixspan": "sequential-pattern levels: three user-keyed "
+    "shuffles (one per level), frequent-set broadcasts, tiny frames "
+    "checkpointed",
+    "graph_louvain_refine": "one synchronous gain sweep over checkpointed "
+    "LPA labels: Pregel-style joins, exact 4m^2 fixed-point modularity, "
+    "1-row model crossJoins",
+    "ts_dtw_dayofweek": "one (type, dow) conditional aggregate, a "
+    "type-domain pair self-join, the band DP inside one MapInPandas",
+    "join_spatial_grid_knn": "the 9-offset literal fan-out of the supplier "
+    "side, one (cx, cy) equi-join, per-supplier rank window",
+    "ts_weighted_interval_sched": "per-user DP in ONE applyInPandas after "
+    "a single shuffle on the key; exact BIGINT micros/cents state",
+    "join_asof_nearest_event": "both-directions nearest as-of in ONE "
+    "union+window pass: backward last(ignorenulls) + forward "
+    "first(ignorenulls) over the same sort — no second shuffle, no range "
+    "explosion",
+    "agg_argminmax_daily": "max_by/min_by over a collision-free "
+    "BIGINT-encoded ordering key: one partial-agg'd hash aggregate, no "
+    "window",
+    "knn_ivfpq_residual": "residual IVF-PQ: assign + encode + ADC all "
+    "map-side in one corpus mapInPandas; only the per-query top-k window "
+    "shuffles candidate rows",
+    "reco_als_rank1": "fixed-point rank-1 ALS: persisted+coalesced ratings "
+    "frame, each half-step one shuffle join against the previous "
+    "BROADCAST factor table",
+    "graph_adamic_adar": "wedge self-join on the hub node with broadcast "
+    "inverse-log-degree weights; anti-join drops existing edges; exact "
+    "top-50 via TakeOrdered",
+    "text_rake_keywords": "corpus-derived delimiters -> running-stopword-"
+    "count window builds phrase ids in one per-doc pass; vocabulary-scale "
+    "word scores broadcast back",
+    "privacy_dp_noisy_histogram": "one partial-agg'd histogram shuffle; the "
+    "literal integer inverse-CDF noise map is a bucket-scale projection",
+    "source_statestore_depgraph": "batch read of the streaming state "
+    "store: one statestore scan, no stream restart",
 }
 
 
