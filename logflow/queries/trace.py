@@ -321,9 +321,10 @@ GROUP BY value % 2
     "sources/wirelog.py): records are wire-encoded with the reference's "
     "exact serde config (utf8 key, 4-byte BE IntegerSerde value, b3 "
     "header re-encoded from the enriched span context — "
-    "application.yml:17-21), persisted as length-prefixed binary frame "
-    "files from the executors, then read back through the registered "
-    "'wirelog' format (one InputPartition per file) and DECODED in the "
+    "application.yml:17-21), framed JVM-side and persisted as four "
+    "length-prefixed binary frame files through the 'wirelog' format's "
+    "two-phase-commit sink, then read back through the same format "
+    "(one InputPartition per file) and DECODED in the "
     "engine: int_be_decode for the value, b3 parse for the trace id. "
     "The oracle recomputes the same aggregate from the unencoded events "
     "derivation — hash-equality proves the produce-side encode and the "
@@ -333,15 +334,23 @@ GROUP BY value % 2
 def source_custom_wirelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logflow.functions.codec import int_be_decode
     from logflow.sources.derived import derived_cache
-    from logflow.sources.wirelog import register_wirelog, write_wirelog
+    from logflow.sources.wirelog import register_wirelog, wire_frame_bytes
     from logflow.streaming.sinks import kafka_wire_frame
 
     def writer(d: str) -> None:
         ev = load_table(spark, "events", sf_dir, parallelize=False)
-        write_wirelog(kafka_wire_frame(enrich_trace(records_from_events(ev))), d)
+        (
+            kafka_wire_frame(enrich_trace(records_from_events(ev)))
+            .select(wire_frame_bytes().alias("frame"))
+            .repartition(4)  # four files: the read's parallelism
+            .write.format("wirelog")
+            .option("path", d)
+            .mode("overwrite")
+            .save()
+        )
 
-    base = derived_cache(sf_dir, "wirelog", ["events"], writer)
     register_wirelog(spark)
+    base = derived_cache(sf_dir, "wirelog", ["events"], writer)
     raw = spark.read.format("wirelog").option("path", base).load()
     decoded = raw.select(
         F.decode(F.col("key"), "UTF-8").alias("key"),

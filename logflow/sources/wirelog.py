@@ -5,8 +5,9 @@ Python connector plug into the planner: the engine's `kafka_wire_frame`
 producer frames (utf8 key bytes, 4-byte big-endian IntegerSerde value
 bytes, b3/baggage headers — exactly the reference's serde config,
 application.yml:17-21) are persisted as length-prefixed binary frame
-files, and this source reads them back with one input partition per
-file. That closes the broker-gap loop end-to-end IN-ENGINE: produce-side
+files through this source's DSv2 sink (``df.write.format("wirelog")``,
+two-phase commit), and read back with one input partition per file.
+That closes the broker-gap loop end-to-end IN-ENGINE: produce-side
 encode → wire bytes on disk → custom-source scan → decode, with no Kafka
 dependency. Against a real deployment the same reader logic would target
 the broker; here the wire format itself is the contract under test.
@@ -14,8 +15,15 @@ the broker; here the wire format itself is the contract under test.
 Frame layout (all lengths unsigned 4-byte big-endian):
     [klen][key][vlen][value][n_headers] then per header [hklen][hk][hvlen][hv]
 
+The module holds one copy of each step of the format's life cycle: one
+framer (:func:`_write_frame`, with :func:`wire_frame_bytes` its JVM-side
+twin), one parser (:func:`_read_frames`, whole file or a byte range),
+one Arrow batcher feeding both readers, and one staged writer
+(:class:`_StagedWriter`) under both sinks, which differ only in
+``commit``.
+
 Scale notes: one file = one InputPartition = one task, so read
-parallelism is the file count (the writer repartitions accordingly);
+parallelism is the file count (the writer's input partitioning sets it);
 frames stream through a generator — nothing buffers a whole file; the
 driver only lists the directory. Filter/column pushdown is not
 implemented (the API supports it via pushFilters) — documented
@@ -27,14 +35,16 @@ from __future__ import annotations
 
 import os
 import struct
+import uuid
 from collections.abc import Iterator
+from itertools import islice
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -42,6 +52,12 @@ from pyspark.sql.datasource import (
 WIRELOG_SCHEMA = "key binary, value binary, headers array<struct<key:string,value:binary>>"
 
 _U32 = struct.Struct(">I")
+
+#: Frames per Arrow RecordBatch yielded by the readers. Bounds reader
+#: memory to one batch of decoded frames per task regardless of file size.
+_ARROW_BATCH_ROWS = 8192
+
+Frame = tuple[bytes, bytes, list[tuple[str, bytes]]]
 
 
 def _write_frame(fh, key: bytes, value: bytes, headers: list[tuple[str, bytes]]) -> None:
@@ -61,20 +77,39 @@ def _write_frame(fh, key: bytes, value: bytes, headers: list[tuple[str, bytes]])
         fh.write(hv)
 
 
-def _read_frames(path: str) -> Iterator[tuple[bytes, bytes, list[tuple[str, bytes]]]]:
+def _read_frames(path: str, start: int = 0, end: int | None = None) -> Iterator[Frame]:
+    """Parse the frames whose first byte lies in ``[start, end)``; ``end``
+    defaults to the file's size when it is opened.
+
+    ``start`` and ``end`` MUST be frame boundaries: the stream reader takes
+    them from size snapshots between whole-frame appends (the writer
+    contract), and the batch reader reads whole files. Every read is
+    length-checked, so a frame cut short by the end of the file or running
+    past ``end`` raises ``ValueError`` naming the file and the frame's
+    offset instead of yielding a short field."""
     with open(path, "rb") as fh:
-        while True:
-            head = fh.read(4)
-            if not head:
-                return
-            key = fh.read(_U32.unpack(head)[0])
-            value = fh.read(_U32.unpack(fh.read(4))[0])
-            n_headers = _U32.unpack(fh.read(4))[0]
-            headers = []
-            for _ in range(n_headers):
-                hk = fh.read(_U32.unpack(fh.read(4))[0]).decode("utf-8")
-                hv = fh.read(_U32.unpack(fh.read(4))[0])
-                headers.append((hk, hv))
+        if end is None:
+            end = os.fstat(fh.fileno()).st_size
+        fh.seek(start)
+        pos = start
+
+        def take(n: int) -> bytes:
+            nonlocal pos
+            data = fh.read(n)
+            pos += n
+            if len(data) < n or pos > end:
+                raise ValueError(f"wirelog file {path}: torn frame at byte {frame_at}")
+            return data
+
+        def field() -> bytes:
+            return take(_U32.unpack(take(4))[0])
+
+        while pos < end:
+            frame_at = pos
+            key, value = field(), field()
+            headers = [
+                (field().decode("utf-8"), field()) for _ in range(_U32.unpack(take(4))[0])
+            ]
             yield key, value, headers
 
 
@@ -120,124 +155,63 @@ def wire_frame_bytes() -> "object":
     )
 
 
-def write_wirelog(wire_frames, path: str, n_files: int = 4) -> int:
-    """Persist a kafka_wire_frame DataFrame as wirelog files; returns the
-    row count written. Executor-side writes (mapInPandas) — the driver
-    never materializes the data; a real deployment would target shared
-    storage instead of the local tmpfs.
-
-    Frames are assembled JVM-side (:func:`wire_frame_bytes`); the Python
-    writer receives one pre-framed binary column per row and does a single
-    ``b"".join`` + ``write`` per Arrow batch — no per-row Python work
-    (the previous ``iterrows`` loop paid pandas Series construction per
-    frame, measured as the #3 bench query at 2.4 s)."""
-    import pandas as pd
-
-    os.makedirs(path, exist_ok=True)
-    # Idempotent restart: the writers append uuid-named part files, so a
-    # retry after a crashed attempt would double-count the crashed
-    # attempt's frames (the reader lists every *.wirelog). Start clean.
-    for f in os.listdir(path):
-        if f.endswith(".wirelog"):
-            os.remove(os.path.join(path, f))
-
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import uuid
-
-        fname = os.path.join(path, f"part-{uuid.uuid4().hex}.wirelog")
-        n = 0
-        with open(fname, "wb") as fh:
-            for pdf in batches:
-                fh.write(b"".join(pdf["frame"]))
-                n += len(pdf)
-        if n == 0:
-            os.remove(fname)
-        yield pd.DataFrame({"n": [n]})
-
-    counts = (
-        wire_frames.select(wire_frame_bytes().alias("frame"))
-        .repartition(n_files)
-        .mapInPandas(write_partition, "n long")
-        .collect()
-    )
-    return sum(r.n for r in counts)
-
-
-#: Frames per Arrow RecordBatch yielded by the reader. Bounds reader
-#: memory to one batch of decoded frames per task regardless of file size.
-_ARROW_BATCH_ROWS = 8192
-
-
 def _arrow_schema():
     import pyarrow as pa
 
+    header = pa.struct([pa.field("key", pa.string()), pa.field("value", pa.binary())])
     return pa.schema(
         [
             pa.field("key", pa.binary()),
             pa.field("value", pa.binary()),
-            pa.field(
-                "headers",
-                pa.list_(
-                    pa.struct([pa.field("key", pa.string()), pa.field("value", pa.binary())])
-                ),
-            ),
+            pa.field("headers", pa.list_(header)),
         ]
     )
 
 
-class WirelogReader(DataSourceReader):
-    """Arrow-batched wirelog scan.
+def _arrow_batches(frames: Iterator[Frame]):
+    """Batch parsed frames into ``pyarrow.RecordBatch``es of at most
+    ``_ARROW_BATCH_ROWS`` rows — the one reader output of both sources.
 
-    ``read()`` yields ``pyarrow.RecordBatch`` (supported by the Spark 4
-    Python DataSource API), not per-frame tuples: the round-4 row-at-a-time
-    generator made this the slowest non-iterative bench query (2.8 s) —
-    every frame paid the Python->JVM row boundary. Batching frames into
-    Arrow moves the boundary to once per ~8k frames; frame DECODE is still
-    the pure-Python reference parser (_read_frames — the byte-level spec),
-    which streams through the file, so a task buffers one batch, never a
-    whole file.
-    """
+    Yielding Arrow batches (supported by the Spark 4 Python DataSource API
+    for batch and stream readers) rather than per-frame tuples moves the
+    Python->JVM row boundary to once per batch: the row-at-a-time generator
+    made ``source_custom_wirelog`` the slowest non-iterative bench query
+    (2.8 s). A task buffers one batch, never a whole file."""
+    import pyarrow as pa
+
+    schema = _arrow_schema()
+    while chunk := list(islice(frames, _ARROW_BATCH_ROWS)):
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(zip(*chunk), schema)],
+            schema=schema,
+        )
+
+
+def _required_path(options: dict) -> str:
+    path = options.get("path")
+    if not path:
+        raise ValueError("the wirelog format requires a 'path' option")
+    return path
+
+
+def _names(path: str, prefix: str = "", suffix: str = ".wirelog") -> list[str]:
+    """Sorted file names in ``path`` with the given prefix and suffix; the
+    defaults list the visible frame files."""
+    return sorted(f for f in os.listdir(path) if f.startswith(prefix) and f.endswith(suffix))
+
+
+class WirelogReader(DataSourceReader):
+    """Batch scan: one input partition per visible ``*.wirelog`` file,
+    decoded by :func:`_read_frames` into Arrow batches."""
 
     def __init__(self, options: dict):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("wirelog source requires a 'path' option")
+        self._path = _required_path(options)
 
     def partitions(self) -> list[InputPartition]:
-        files = sorted(
-            os.path.join(self._path, f)
-            for f in os.listdir(self._path)
-            if f.endswith(".wirelog")
-        )
-        return [InputPartition(f) for f in files]
+        return [InputPartition(os.path.join(self._path, f)) for f in _names(self._path)]
 
     def read(self, partition: InputPartition):
-        import pyarrow as pa
-
-        schema = _arrow_schema()
-        keys: list[bytes] = []
-        vals: list[bytes] = []
-        hdrs: list[list[dict]] = []
-
-        def flush():
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(keys, type=schema.field("key").type),
-                    pa.array(vals, type=schema.field("value").type),
-                    pa.array(hdrs, type=schema.field("headers").type),
-                ],
-                schema=schema,
-            )
-
-        for key, value, headers in _read_frames(partition.value):
-            keys.append(key)
-            vals.append(value)
-            hdrs.append([{"key": hk, "value": hv} for hk, hv in headers])
-            if len(keys) >= _ARROW_BATCH_ROWS:
-                yield flush()
-                keys, vals, hdrs = [], [], []
-        if keys:
-            yield flush()
+        return _arrow_batches(_read_frames(partition.value))
 
 
 class WirelogDataSource(DataSource):
@@ -266,31 +240,6 @@ def register_wirelog(spark) -> None:
     spark.dataSource.register(WirelogDataSource)
 
 
-def _read_frames_range(
-    path: str, start: int, end: int
-) -> Iterator[tuple[bytes, bytes, list[tuple[str, bytes]]]]:
-    """Parse frames whose first byte lies in [start, end) — the streaming
-    micro-batch slice. ``start``/``end`` MUST be frame boundaries (they
-    come from size snapshots taken between atomic whole-frame appends —
-    the writer contract); a torn frame raises via struct.error rather
-    than yielding garbage."""
-    with open(path, "rb") as fh:
-        fh.seek(start)
-        while fh.tell() < end:
-            head = fh.read(4)
-            if not head:
-                return
-            key = fh.read(_U32.unpack(head)[0])
-            value = fh.read(_U32.unpack(fh.read(4))[0])
-            n_headers = _U32.unpack(fh.read(4))[0]
-            headers = []
-            for _ in range(n_headers):
-                hk = fh.read(_U32.unpack(fh.read(4))[0]).decode("utf-8")
-                hv = fh.read(_U32.unpack(fh.read(4))[0])
-                headers.append((hk, hv))
-            yield key, value, headers
-
-
 class WirelogStreamReader(DataSourceStreamReader):
     """Micro-batch STREAMING tail of a wirelog directory — the closest
     sandbox analog of the reference's live Kafka consumption
@@ -309,22 +258,15 @@ class WirelogStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options: dict):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("wirelog stream source requires a 'path' option")
-
-    def _sizes(self) -> dict:
-        return {
-            f: os.path.getsize(os.path.join(self._path, f))
-            for f in sorted(os.listdir(self._path))
-            if f.endswith(".wirelog")
-        }
+        self._path = _required_path(options)
 
     def initialOffset(self) -> dict:
         return {"sizes": {}}
 
     def latestOffset(self) -> dict:
-        return {"sizes": self._sizes()}
+        return {
+            "sizes": {f: os.path.getsize(os.path.join(self._path, f)) for f in _names(self._path)}
+        }
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         out = []
@@ -342,12 +284,7 @@ class WirelogStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: InputPartition):
-        path, start_pos, end_pos = partition.value
-        for key, value, headers in _read_frames_range(path, start_pos, end_pos):
-            yield key, value, headers
-
-    def commit(self, end: dict) -> None:
-        pass
+        return _arrow_batches(_read_frames(*partition.value))
 
 
 class WirelogCommit(WriterCommitMessage):
@@ -358,68 +295,51 @@ class WirelogCommit(WriterCommitMessage):
         self.n = n
 
 
-class WirelogArrowWriter(DataSourceArrowWriter):
-    """Batch SINK half of the wirelog connector (``df.write.format(
-    "wirelog")``) with the DSv2 TWO-PHASE COMMIT protocol — the part the
-    mapInPandas-based :func:`write_wirelog` path cannot express:
+class _StagedWriter:
+    """Executor half and cleanup shared by both wirelog sinks.
 
-    * ``write`` (executor, once per task) encodes its Arrow batches into a
-      STAGED file named ``.part-<uuid>.wirelog.tmp`` — the leading dot and
-      ``.tmp`` suffix keep it invisible to the reader's ``*.wirelog``
-      listing, so a crashed task can never leak half-written frames into
-      a concurrent read;
-    * ``commit`` (driver, after ALL tasks succeed) atomically renames every
-      staged file to its visible ``part-*.wirelog`` name (rename is atomic
-      on POSIX; on overwrite it first clears prior visible files);
-    * ``abort`` deletes the staged files — the directory's visible state is
-      byte-identical to before the failed write.
+    * ``write`` (executor, once per task) streams its Arrow batches into a
+      STAGED file named ``.part-<job>-<uuid>.wirelog.tmp`` — the leading
+      dot and ``.tmp`` suffix keep it invisible to the readers'
+      ``*.wirelog`` listing, so a crashed task can never leak half-written
+      frames into a concurrent read. Task memory is bounded by ONE batch.
+      The file is opened LAZILY on the first non-empty batch and removed
+      task-locally on any failure, so a failing or killed task leaves no
+      staging behind; the job-prefix sweep is the backstop for attempts
+      that die without running the except block.
+    * ``abort`` and the end of every ``commit`` sweep THIS JOB's staged
+      files (losing speculative, retried or killed attempts included:
+      ``commit`` renames only the reported winners). The job id is drawn
+      once on the driver and pickled to every task, so a concurrent job's
+      staging is never touched.
 
     Rows arrive either pre-framed (a single ``frame binary`` column —
-    frames assembled JVM-side by :func:`wire_frame_bytes`, the fast path)
-    or as the raw (key, value, headers) wire schema, encoded here with the
-    same writer the tests' golden files use. On a cluster the staging dir
-    would live on the shared filesystem next to the target (same
-    rename-domain); tmpfs stands in here, as everywhere in this repo.
+    frames assembled JVM-side by :func:`wire_frame_bytes`, written with
+    one ``write`` per batch) or as the raw (key, value, headers) wire
+    schema, encoded here by :func:`_write_frame`. On a cluster the staging
+    would live on the shared filesystem next to the target (same rename
+    domain); tmpfs stands in here, as everywhere in this repo.
     """
 
-    def __init__(self, options: dict, overwrite: bool):
-        import uuid
-
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("wirelog writer requires a 'path' option")
+    def __init__(self, options: dict, overwrite: bool = False):
+        self._path = _required_path(options)
         self._overwrite = overwrite
-        # Job-scoped staging prefix, generated ONCE on the driver and
-        # pickled to every task: commit/abort can then sweep this job's
-        # staged leftovers (killed / losing-speculative attempts) without
-        # touching a concurrent job's staging files.
         self._job = uuid.uuid4().hex
 
     def write(self, iterator) -> WirelogCommit:
-        import uuid
-
         os.makedirs(self._path, exist_ok=True)
-        # Stream frames to the staged file per Arrow batch — task memory is
-        # bounded by ONE batch, never the whole partition (the reader makes
-        # the same per-batch guarantee; an in-memory buffer here would be
-        # unbounded in partition size at 100 TB). The file is opened
-        # LAZILY on the first frame and removed task-locally on any
-        # failure, so a failing / killed task deterministically leaves no
-        # staging behind (commit/abort's job-prefix sweep is the backstop
-        # for attempts that die without running the except block).
         tmp_name = f".part-{self._job}-{uuid.uuid4().hex}.wirelog.tmp"
         tmp_path = os.path.join(self._path, tmp_name)
         n = 0
         fh = None
         try:
             for batch in iterator:
+                if not batch.num_rows:
+                    continue
                 if fh is None:
                     fh = open(tmp_path, "wb")
-                names = batch.schema.names
-                if names == ["frame"]:
-                    for frame in batch.column("frame").to_pylist():
-                        fh.write(frame)
-                        n += 1
+                if batch.schema.names == ["frame"]:
+                    fh.write(b"".join(batch.column(0).to_pylist()))
                 else:
                     d = batch.to_pydict()
                     for key, value, headers in zip(d["key"], d["value"], d["headers"]):
@@ -427,82 +347,72 @@ class WirelogArrowWriter(DataSourceArrowWriter):
                             fh,
                             key or b"",
                             value or b"",
-                            [(h["key"], h["value"]) for h in (headers or [])],
+                            [(h["key"], h["value"]) for h in headers or []],
                         )
-                        n += 1
+                n += batch.num_rows
         except BaseException:
             if fh is not None:
-                fh.close()
-                if os.path.exists(tmp_path):
-                    os.remove(tmp_path)
+                os.remove(tmp_path)
             raise
-        if fh is not None:
-            fh.close()
-        if not n and os.path.exists(tmp_path):
-            os.remove(tmp_path)
+        finally:
+            if fh is not None:
+                fh.close()
         return WirelogCommit(tmp_name, n)
 
+    def _rename(self, tmp_name: str, final: str) -> str:
+        os.rename(os.path.join(self._path, tmp_name), os.path.join(self._path, final))
+        return final
+
+    def _remove(self, names) -> None:
+        for f in names:
+            os.remove(os.path.join(self._path, f))
+
+    def _sweep_staged(self) -> None:
+        self._remove(_names(self._path, f".part-{self._job}-", ".wirelog.tmp"))
+
+    def abort(self, messages, batchId: int | None = None) -> None:
+        # Every staged file of this job, reported in ``messages`` or not,
+        # carries the job prefix; the sweep removes them all.
+        if os.path.isdir(self._path):
+            self._sweep_staged()
+
+
+class WirelogArrowWriter(_StagedWriter, DataSourceArrowWriter):
+    """Batch SINK (``df.write.format("wirelog")``) with the DSv2 TWO-PHASE
+    COMMIT protocol: ``write`` stages (:class:`_StagedWriter`); ``commit``
+    (driver, after ALL tasks succeed) atomically renames every staged file
+    to its visible ``part-<job>-<uuid>.wirelog`` name (rename is atomic on
+    POSIX) and, on overwrite, then removes the visible files this job did
+    not produce; ``abort`` deletes the staging — the directory's visible
+    state is byte-identical to before the failed write.
+    """
+
     def commit(self, messages) -> None:
-        staged = [m for m in messages if m.n > 0]
         # Overwrite is made crash-safe by ORDERING: rename the staged
         # winners to their visible names FIRST, and only then delete the
         # pre-existing visible files this job did not produce. A driver
         # crash mid-commit leaves old+new data visible (recoverable /
         # idempotently re-committable) — never the old data deleted with
         # the new still hidden.
-        pre_existing = {f for f in os.listdir(self._path) if f.endswith(".wirelog")}
-        new_names = set()
-        for m in staged:
-            final = m.tmp_name[1:-4]  # strip leading "." and ".tmp"
-            os.rename(
-                os.path.join(self._path, m.tmp_name),
-                os.path.join(self._path, final),
-            )
-            new_names.add(final)
+        pre_existing = set(_names(self._path))
+        # strip the leading "." and the ".tmp" suffix
+        new = {self._rename(m.tmp_name, m.tmp_name[1:-4]) for m in messages if m.n}
         if self._overwrite:
-            for f in pre_existing - new_names:
-                os.remove(os.path.join(self._path, f))
+            self._remove(pre_existing - new)
         self._sweep_staged()
 
-    def _sweep_staged(self) -> None:
-        # Sweep THIS JOB's staged leftovers (losing speculative / retried /
-        # killed task attempts): commit() renames only the reported winners
-        # and abort()'s messages cover only tasks that returned, so
-        # orphaned hidden tmps would otherwise accumulate forever. The
-        # job-scoped prefix keeps a concurrent job's staging untouched.
-        prefix = f".part-{self._job}-"
-        for f in os.listdir(self._path):
-            if f.startswith(prefix) and f.endswith(".wirelog.tmp"):
-                os.remove(os.path.join(self._path, f))
 
-    def abort(self, messages) -> None:
-        for m in messages or []:
-            if m is None:
-                continue
-            tmp = os.path.join(self._path, m.tmp_name)
-            if os.path.exists(tmp):
-                os.remove(tmp)
-        if os.path.isdir(self._path):
-            self._sweep_staged()
-
-
-class WirelogStreamWriter(DataSourceStreamWriter):
-    """STREAMING sink half of the wirelog connector (``df.writeStream
-    .format("wirelog")``) — the continuous twin of
-    :class:`WirelogArrowWriter`, with EPOCH-IDEMPOTENT commits:
-
-    * ``write`` (executor, once per task per micro-batch) streams frames
-      row-by-row into a staged ``.part-<job>-<uuid>.wirelog.tmp`` (lazy
-      open + task-local cleanup, the batch writer's discipline);
-    * ``commit(messages, batchId)`` (driver, after the epoch's tasks all
-      succeed) first deletes any visible ``part-b<batchId>-*.wirelog``
-      left by a CRASHED previous attempt of the SAME epoch, then renames
-      the staged winners to deterministic epoch-keyed names
-      ``part-b<batchId>-<seq>.wirelog`` — so a replayed micro-batch
-      REPLACES rather than duplicates its own output (exactly-once at
-      the file level, the foreachBatch-upsert guarantee without user
-      code);
-    * ``abort(messages, batchId)`` removes the epoch's staging.
+class WirelogStreamWriter(_StagedWriter, DataSourceStreamArrowWriter):
+    """STREAMING sink (``df.writeStream.format("wirelog")``) with
+    EPOCH-IDEMPOTENT commits: ``write`` stages (:class:`_StagedWriter`,
+    once per task per micro-batch); ``commit(messages, batchId)`` (driver,
+    after the epoch's tasks all succeed) first deletes any visible
+    ``part-b<batchId>-*.wirelog`` left by a CRASHED previous attempt of the
+    SAME epoch, then renames the staged winners to deterministic
+    epoch-keyed names ``part-b<batchId>-<seq>.wirelog`` — so a replayed
+    micro-batch REPLACES rather than duplicates its own output
+    (exactly-once at the file level, the foreachBatch-upsert guarantee
+    without user code); ``abort(messages, batchId)`` removes the staging.
 
     At 100 TB this is the standard epoch-commit streaming-file-sink
     protocol (Spark's own FileStreamSink keeps the same idempotence via
@@ -510,74 +420,9 @@ class WirelogStreamWriter(DataSourceStreamWriter):
     manifest here, matching the connector's directory-is-the-log model).
     """
 
-    def __init__(self, options: dict):
-        import uuid
-
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("wirelog stream writer requires a 'path' option")
-        self._job = uuid.uuid4().hex
-
-    def write(self, iterator) -> WirelogCommit:
-        import uuid
-
-        os.makedirs(self._path, exist_ok=True)
-        tmp_name = f".part-{self._job}-{uuid.uuid4().hex}.wirelog.tmp"
-        tmp_path = os.path.join(self._path, tmp_name)
-        n = 0
-        fh = None
-        try:
-            for row in iterator:
-                if fh is None:
-                    fh = open(tmp_path, "wb")
-                _write_frame(
-                    fh,
-                    bytes(row.key or b""),
-                    bytes(row.value or b""),
-                    [(h.key, bytes(h.value)) for h in (row.headers or [])],
-                )
-                n += 1
-        except BaseException:
-            if fh is not None:
-                fh.close()
-                if os.path.exists(tmp_path):
-                    os.remove(tmp_path)
-            raise
-        if fh is not None:
-            fh.close()
-        if not n and os.path.exists(tmp_path):
-            os.remove(tmp_path)
-        return WirelogCommit(tmp_name, n)
-
     def commit(self, messages, batchId: int) -> None:
-        # Epoch idempotence: clear THIS epoch's previously-visible files
-        # (a crashed attempt), then publish the new attempt under
-        # deterministic epoch-keyed names.
         prefix = f"part-b{batchId:010d}-"
-        for f in os.listdir(self._path):
-            if f.startswith(prefix) and f.endswith(".wirelog"):
-                os.remove(os.path.join(self._path, f))
-        seq = 0
-        for m in messages:
-            if m is None or m.n == 0:
-                continue
-            os.rename(
-                os.path.join(self._path, m.tmp_name),
-                os.path.join(self._path, f"{prefix}{seq:05d}.wirelog"),
-            )
-            seq += 1
-        for f in os.listdir(self._path):
-            if f.startswith(f".part-{self._job}-") and f.endswith(".wirelog.tmp"):
-                os.remove(os.path.join(self._path, f))
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages or []:
-            if m is None:
-                continue
-            tmp = os.path.join(self._path, m.tmp_name)
-            if os.path.exists(tmp):
-                os.remove(tmp)
-        if os.path.isdir(self._path):
-            for f in os.listdir(self._path):
-                if f.startswith(f".part-{self._job}-") and f.endswith(".wirelog.tmp"):
-                    os.remove(os.path.join(self._path, f))
+        self._remove(_names(self._path, prefix))
+        for seq, m in enumerate(m for m in messages if m.n):
+            self._rename(m.tmp_name, f"{prefix}{seq:05d}.wirelog")
+        self._sweep_staged()

@@ -1542,24 +1542,91 @@ def test_wirelog_stream_writer_epoch_replay_is_idempotent(tmp_path):
     attempt's files, never duplicate frames."""
     import os
 
-    from pyspark.sql import Row
+    import pyarrow as pa
 
-    from logflow.sources.wirelog import WirelogStreamWriter, _read_frames
+    from logflow.sources.wirelog import WirelogStreamWriter, _arrow_schema, _read_frames
 
     out = str(tmp_path / "replay_out")
-    rows = [
-        Row(key=b"a", value=b"1", headers=[]),
-        Row(key=b"b", value=b"2", headers=[]),
-    ]
+    batch = pa.RecordBatch.from_pydict(
+        {"key": [b"a", b"b"], "value": [b"1", b"2"], "headers": [[], []]},
+        schema=_arrow_schema(),
+    )
     for attempt in range(2):  # same epoch committed twice
         w = WirelogStreamWriter({"path": out})
-        msg = w.write(iter(rows))
+        msg = w.write(iter([batch]))
         w.commit([msg], batchId=7)
     files = [f for f in os.listdir(out) if f.endswith(".wirelog")]
     assert len(files) == 1 and files[0].startswith("part-b0000000007-")
     frames = list(_read_frames(os.path.join(out, files[0])))
     assert len(frames) == 2
     assert not [f for f in os.listdir(out) if f.endswith(".tmp")]
+
+
+def _wirelog_file(path, n):
+    """Write ``n`` frames with the reference framer; return the frames and
+    the byte offset at which each one starts, plus the file size."""
+    from logflow.sources.wirelog import _write_frame
+
+    frames, bounds = [], []
+    with open(path, "wb") as fh:
+        for i in range(n):
+            bounds.append(fh.tell())
+            frame = (
+                f"k{i}".encode(),
+                i.to_bytes(4, "big"),
+                [("b3", f"trace-{i}-{'x' * i}".encode()), ("baggage", b"m=%d" % i)][: i % 3],
+            )
+            _write_frame(fh, *frame)
+            frames.append(frame)
+        bounds.append(fh.tell())
+    return frames, bounds
+
+
+def test_wirelog_read_frames_ranges_compose(tmp_path):
+    """The replay contract of the stream reader: the whole-file read, the
+    [0, size) read and the concatenation of the reads over every pair of
+    consecutive frame boundaries all give the written frames; an ``end``
+    inside a frame raises."""
+    from logflow.sources.wirelog import _read_frames
+
+    p = str(tmp_path / "r.wirelog")
+    frames, bounds = _wirelog_file(p, 7)
+    assert list(_read_frames(p)) == frames
+    assert list(_read_frames(p, 0, bounds[-1])) == frames
+    sliced = [f for a, b in zip(bounds, bounds[1:]) for f in _read_frames(p, a, b)]
+    assert sliced == frames
+    assert list(_read_frames(p, bounds[2], bounds[5])) == frames[2:5]
+    assert list(_read_frames(p, bounds[3], bounds[3])) == []
+    with pytest.raises(ValueError, match="torn frame at byte"):
+        list(_read_frames(p, bounds[1], bounds[3] - 1))
+
+
+def test_wirelog_torn_last_frame_raises(tmp_path):
+    """A file cut anywhere inside its last frame must raise a ValueError
+    naming the file and the frame's offset, from both readers, rather than
+    yield a short frame."""
+    import re
+
+    from pyspark.sql.datasource import InputPartition
+
+    from logflow.sources.wirelog import WirelogReader, WirelogStreamReader, _read_frames
+
+    p = str(tmp_path / "t.wirelog")
+    _, bounds = _wirelog_file(p, 6)  # the last frame carries two headers
+    with open(p, "rb") as fh:
+        data = fh.read()
+    last, size = bounds[-2], bounds[-1]
+    for cut in sorted({last + 1, last + 4, last + 7, size - 9, size - 5, size - 1}):
+        with open(p, "wb") as fh:
+            fh.write(data[:cut])
+        msg = re.escape(f"{p}: torn frame at byte {last}")
+        with pytest.raises(ValueError, match=msg):
+            list(_read_frames(p))
+        with pytest.raises(ValueError, match=msg):
+            list(WirelogReader({"path": str(tmp_path)}).read(InputPartition(p)))
+        stream = WirelogStreamReader({"path": str(tmp_path)})
+        with pytest.raises(ValueError, match=msg):
+            list(stream.read(InputPartition((p, 0, cut))))
 
 
 def test_streaming_heavy_hitters_recall_guarantee(spark, tmp_path):

@@ -119,9 +119,15 @@ TRACE_QUERIES = [
 
 
 @pytest.mark.parametrize("name", TRACE_QUERIES)
-def test_oracle_parity(spark, duck, sf_dir, name):
+def test_oracle_parity(spark, duck, sf_dir, name, tmp_path, monkeypatch):
+    import tempfile
+
     from tests.oracle import check_query
 
+    # A fresh derived-cache root: source_custom_wirelog then builds its
+    # frame files through the wirelog sink on every run instead of reading
+    # a /tmp copy left by an earlier build.
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     check_query(spark, duck, name, sf_dir)
 
 
