@@ -435,8 +435,9 @@ GROUP BY 1, 2
     "stream (streaming/stateful.py:streaming_dependency_graph) is run "
     "once to completion (availableNow, noop sink) with its checkpoint "
     "under a derived_cache dir, and the query then reads the RAW STATE "
-    "back via spark.read.format('statestore') — key struct + "
-    "value.groupState.n per (service, remote) edge. Because the state "
+    "back via spark.read.format('statestore') — the built-in streaming "
+    "aggregate's key struct<service, remote> + value.count (its agg "
+    "buffer field) per edge. Because the state "
     "after draining the bounded stream is exactly the running count per "
     "edge, the read-back state equals the batch Q3 aggregate, making "
     "this checkpoint-forensics surface fully ORACLE-CHECKABLE (the "
@@ -474,31 +475,21 @@ def source_statestore_depgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination(300)
 
-    base = derived_cache(sf_dir, "statestore_depgraph", ["events"], writer)
+    # derived_cache keys on the source parquet only, so the name carries
+    # the state layout: a checkpoint of the earlier applyInPandasWithState
+    # operator, left under the same TMPDIR, has no value.count and must
+    # not be served to this reader of the streaming aggregate's state.
+    base = derived_cache(sf_dir, "statestore_depgraph_agg", ["events"], writer)
     # The batch statestore reader resolves the session's
     # StateStoreCoordinator RPC endpoint, which Spark only instantiates
     # once a stateful streaming query has run — on a warm cache no stream
     # runs in this session and the read dies with RpcEndpointNotFound.
     # Touch the lazily-created coordinator up front (same call the first
-    # stateful StreamExecution makes); fall back to a no-op stateful
-    # stream if the internal accessor ever moves.
-    try:
-        spark._jsparkSession.sessionState().streamingQueryManager().stateStoreCoordinator()
-    except Exception:  # pragma: no cover - accessor moved; boot via stream
-        boot = (
-            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-            .dropDuplicates(["value"])
-            .writeStream.format("noop")
-            .option(
-                "checkpointLocation", os.path.join(base, "coordinator_boot")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        boot.awaitTermination(60)
+    # stateful StreamExecution makes).
+    spark._jsparkSession.sessionState().streamingQueryManager().stateStoreCoordinator()
     st = spark.read.format("statestore").load(os.path.join(base, "ckpt"))
     return st.select(
         F.col("key.service").alias("service"),
         F.col("key.remote").alias("remote"),
-        F.col("value.groupState.n").cast("long").alias("call_count"),
+        F.col("value.count").alias("call_count"),
     ).orderBy("service", "remote")

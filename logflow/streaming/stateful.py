@@ -1,18 +1,20 @@
-"""Custom stateful streaming operator (SURVEY §2.2 "streaming: stateful").
+"""Stateful streaming operators (SURVEY §2.2 "streaming: stateful").
 
-The built-in streaming aggregation already covers the incremental
-dependency graph (Q3) in update mode; this module provides the CUSTOM
-state path — ``applyInPandasWithState`` — for operators whose semantics a
-streaming agg can't express (per-key running state with arbitrary
-transition logic).  The demo op is an incremental per-key total that
-emits the updated running (count, sum) for every key touched by a
-micro-batch: the streaming form of ``groupBy(key).agg(count, sum)`` whose
-per-batch outputs converge to the batch result (asserted in tests).
+One state path per shape.  An operator whose per-key state is an
+aggregate buffer (counts, sums, distinct sets) is Spark's own streaming
+aggregate in update mode: ``running_totals``, ``distinct_label_counts``
+and ``streaming_dependency_graph``.  Their state lives in the engine's
+state store, each micro-batch stays in the JVM, and the statestore
+reader shows it as ``value.<agg buffer field>``.  ``applyInPandasWithState``
+is kept for the operators whose transitions are not aggregates: the
+funnel automaton, Misra-Gries, the frozen-prefix KS monitor and
+event-time-timeout sessions.
 
-Scale notes: state is partitioned by the grouping key across executors
-(HDFS/RocksDB-backed state store at cluster scale), each Arrow batch
-carries one key's rows, and state size is O(distinct keys) — the shape
-that keeps a 100 TB/day stream's state bounded.
+Both paths partition state by the grouping key across executors
+(HDFS/RocksDB-backed state store at cluster scale) and keep it
+O(distinct keys) — the shape that keeps a 100 TB/day stream's state
+bounded.  Each aggregate's latest emission per key equals its batch
+``groupBy`` over everything seen so far (asserted in tests).
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -30,27 +33,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-RUNNING_TOTAL_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("n", LongType()),
-        StructField("total", DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = "n LONG, total DOUBLE"
-
-
-def _update_running_totals(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in batches:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"key": [key[0]], "n": [n], "total": [total]})
-
 
 def running_totals(records: DataFrame, key_col: str, value_col: str) -> DataFrame:
     """Incremental (count, sum) per key over a stream.
@@ -59,107 +41,31 @@ def running_totals(records: DataFrame, key_col: str, value_col: str) -> DataFram
     running totals since stream start; the latest row per key equals the
     batch ``groupBy(key).count/sum`` over everything seen so far.
     """
-    from pyspark.sql import functions as F
-
     keyed = records.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _update_running_totals,
-        outputStructType=RUNNING_TOTAL_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed.groupBy("key").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("value").alias("total")
     )
-
-
-# --------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
-# --------------------------------------------------------------------------
-
-DISTINCT_TYPES_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("n_events", LongType()),
-        StructField("n_types", LongType()),
-    ]
-)
-
-
-def transform_with_state_available() -> bool:
-    """transformWithStateInPandas drives its state server over protobuf;
-    environments without the ``protobuf`` package (this container) can
-    define the processor but not run it — the query would die with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE at start. Tests skip
-    on this predicate; applyInPandasWithState (no protobuf dependency)
-    is the exercised stateful surface here."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _make_distinct_types_processor():
-    """Processor class built lazily: the StatefulProcessor import pulls
-    streaming-state machinery that batch-only users never need."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class DistinctTypesProcessor(StatefulProcessor):
-        """Per-key event count + EXACT distinct label count.
-
-        Composite state the older applyInPandasWithState models awkwardly
-        as one blob: a ValueState scalar (event count) plus a MapState
-        keyed by label (the distinct set — per-entry state-store updates,
-        no read-modify-write of the whole set). State is O(distinct
-        labels) per key and lives in the per-partition state store
-        (RocksDB at cluster scale), so a 100 TB/day stream's state stays
-        bounded by cardinality, not volume.
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n", "n LONG")
-            self._seen = handle.getMapState("seen", "label STRING", "one LONG")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-                for label in pdf["label"].unique():
-                    self._seen.updateValue((str(label),), (1,))
-            self._n.update((n,))
-            n_types = sum(1 for _ in self._seen.keys())
-            yield pd.DataFrame(
-                {"key": [key[0]], "n_events": [n], "n_types": [n_types]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return DistinctTypesProcessor()
 
 
 def distinct_label_counts(records: DataFrame, key_col: str, label_col: str) -> DataFrame:
-    """Streaming per-key (event count, exact distinct label count) via
-    transformWithStateInPandas — the latest emitted row per key equals the
-    batch ``groupBy(key).agg(count(*), countDistinct(label))`` over
-    everything seen so far (asserted in tests)."""
-    from pyspark.sql import functions as F
+    """Streaming per-key (event count, exact distinct label count).
 
+    The latest emitted row per key equals the batch
+    ``groupBy(key).agg(count(*), countDistinct(label))`` over everything
+    seen so far (asserted in tests).  The ``collect_set`` buffer holds
+    each key's distinct labels, so state is O(distinct labels) per key,
+    bounded by cardinality, not volume.
+    """
     keyed = records.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(label_col).cast("string").alias("label"),
     )
-    return keyed.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=_make_distinct_types_processor(),
-        outputStructType=DISTINCT_TYPES_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+    return keyed.groupBy("key").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.size(F.collect_set("label")).cast("long").alias("n_types"),
     )
 
 
@@ -244,8 +150,6 @@ def streaming_funnel_counts(events: DataFrame) -> DataFrame:
     unbounded 100 TB/day stream, where the batch form's per-user symbol
     string would grow without bound.
     """
-    from pyspark.sql import functions as F
-
     keyed = events.select(
         F.col("user_id").cast("string").alias("key"),
         F.col("ts"),
@@ -320,8 +224,6 @@ def streaming_heavy_hitters(records: DataFrame, item_col: str, n_buckets: int = 
     count >= bucket_total/capacity survives in its bucket's summary, so a
     downstream exact verify over the candidate set stays corpus-bounded).
     """
-    from pyspark.sql import functions as F
-
     keyed = records.select(
         (F.col(item_col) % n_buckets).cast("long").alias("bucket"),
         F.col(item_col).cast("long").alias("item"),
@@ -439,8 +341,6 @@ def ks_drift_monitor(
     ordering column (e.g. event time) upstream, or pick ``ref_n`` as a
     multiple of the ingest batch size.
     """
-    from pyspark.sql import functions as F
-
     keyed = records.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).cast("double").alias("value"),
@@ -457,32 +357,10 @@ def ks_drift_monitor(
 # --------------------------------------------------------------------------
 # Streaming dependency graph — the incremental twin of the batch Q3
 # (queries/trace.py:trace_dependency_graph): per-(service, remote) edge
-# call counts maintained across micro-batches via applyInPandasWithState,
+# call counts maintained across micro-batches by the streaming aggregate,
 # the reference's Zipkin dependency aggregation kept continuously fresh
 # instead of recomputed per batch window.
 # --------------------------------------------------------------------------
-
-DEP_GRAPH_SCHEMA = StructType(
-    [
-        StructField("service", StringType()),
-        StructField("remote", StringType()),
-        StructField("call_count", LongType()),
-    ]
-)
-
-_DEP_STATE = "n LONG"
-
-
-def _update_dep_edge(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n = state.get[0] if state.exists else 0
-    for pdf in batches:
-        n += len(pdf)
-    state.update((n,))
-    yield pd.DataFrame(
-        {"service": [key[0]], "remote": [key[1]], "call_count": [n]}
-    )
 
 
 def streaming_dependency_graph(spans: DataFrame) -> DataFrame:
@@ -496,8 +374,6 @@ def streaming_dependency_graph(spans: DataFrame) -> DataFrame:
     (asserted in tests), so the graph stays exactly-once consistent
     with the batch recompute.
     """
-    from pyspark.sql import functions as F
-
     edges = spans.filter(F.col("kafka_topic").isNotNull()).select(
         "service",
         # remote_service arrives already P3-rewritten (operators/topology.
@@ -505,12 +381,8 @@ def streaming_dependency_graph(spans: DataFrame) -> DataFrame:
         # the batch Q3, so the two results compare key-for-key.
         F.col("remote_service").alias("remote"),
     )
-    return edges.groupBy("service", "remote").applyInPandasWithState(
-        _update_dep_edge,
-        outputStructType=DEP_GRAPH_SCHEMA,
-        stateStructType=_DEP_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return edges.groupBy("service", "remote").agg(
+        F.count(F.lit(1)).alias("call_count")
     )
 
 
@@ -601,8 +473,6 @@ def streaming_session_gap(
     ``sessionize_events`` lag+running-sum sessions over the same feed
     (asserted in tests, including across a checkpoint restart).
     """
-    from pyspark.sql import functions as F
-
     keyed = records.select(
         F.col(key_col).cast("string").alias("key"),
         # watermarks accept TIMESTAMP only (EVENT_TIME_IS_NOT_ON_TIMESTAMP

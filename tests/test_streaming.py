@@ -321,6 +321,9 @@ def test_streaming_stateful_totals_sf001_match_batch(spark, tmp_path):
     }
     assert len(want) > 100
     assert latest == want
+    # bounded state: one state row per distinct key, however many batches
+    last = [p for p in q.recentProgress if p.numInputRows > 0][-1]
+    assert last.stateOperators[0].numRowsTotal == len(want)
 
 
 def test_streaming_watermark_drops_late_rows(spark, tmp_path):
@@ -609,14 +612,9 @@ def test_kafka_wire_frame_roundtrip(spark, record_dir):
         assert r.b3 == f"{orig.trace_id}-{orig.span_id}-1"
 
 
-@pytest.mark.skipif(
-    not __import__("logflow.streaming.stateful", fromlist=["x"]).transform_with_state_available(),
-    reason="transformWithStateInPandas needs the protobuf package (absent in this container)",
-)
 def test_streaming_transform_with_state_distinct_labels(spark, tmp_path):
-    """transformWithStateInPandas: ValueState + MapState across
-    micro-batches — the latest per-key row must equal the batch
-    groupBy(count, countDistinct)."""
+    """Streaming count + collect_set aggregate across micro-batches — the
+    latest per-key row must equal the batch groupBy(count, countDistinct)."""
     from logflow.streaming.stateful import distinct_label_counts
 
     path = str(tmp_path / "ev5")
@@ -661,12 +659,8 @@ def test_streaming_transform_with_state_distinct_labels(spark, tmp_path):
     assert len(rows) > len(want)  # user 1 emitted in both micro-batches
 
 
-@pytest.mark.skipif(
-    not __import__("logflow.streaming.stateful", fromlist=["x"]).transform_with_state_available(),
-    reason="transformWithStateInPandas needs the protobuf package (absent in this container)",
-)
 def test_streaming_transform_with_state_sf001_match_batch(spark, tmp_path):
-    """transformWithStateInPandas over the sf0.001 events fixture in two
+    """distinct_label_counts over the sf0.001 events fixture in two
     micro-batches: final per-user (n, distinct types) equals the batch
     aggregate over the whole table."""
     from logflow.sources.tables import load_table
@@ -715,15 +709,16 @@ def test_streaming_transform_with_state_sf001_match_batch(spark, tmp_path):
 
 
 def test_streaming_incremental_dependency_graph(spark, tmp_path):
-    """The reference's Q3 dependency graph as a STREAMING aggregate in
-    update mode (the 'incremental dependency graph' row of SURVEY §2.2):
-    spans derived per micro-batch, groupBy(service, remote) count — the
-    latest update per edge after two micro-batches must equal the batch
+    """The reference's Q3 dependency graph as a STREAMING aggregate (the
+    'incremental dependency graph' row of SURVEY §2.2): spans derived per
+    micro-batch into streaming_dependency_graph — in complete mode after
+    two micro-batches the table must equal the batch
     trace_dependency_graph over the same events."""
     from logflow.operators.topology import rewrite_remote_service, spans_from_records
     from logflow.queries import load_all
     from logflow.sources.records import records_from_events
     from logflow.sources.tables import load_table
+    from logflow.streaming.stateful import streaming_dependency_graph
 
     sf = "/root/testdata/sf0.001"
     ev = load_table(spark, "events", sf, parallelize=False)
@@ -737,13 +732,9 @@ def test_streaming_incremental_dependency_graph(spark, tmp_path):
         .parquet(path)
     )
     spans = rewrite_remote_service(spans_from_records(records_from_events(stream)))
-    agg = (
-        spans.filter(F.col("kafka_topic").isNotNull())
-        .groupBy("service", F.col("remote_service").alias("remote"))
-        .agg(F.count(F.lit(1)).alias("call_count"))
-    )
     q = (
-        agg.writeStream.format("memory")
+        streaming_dependency_graph(spans)
+        .writeStream.format("memory")
         .queryName("depgraph_t")
         .outputMode("complete")
         .option("checkpointLocation", str(tmp_path / "ckpt_dep"))
@@ -1839,19 +1830,23 @@ def test_streaming_dependency_graph_matches_batch(spark, tmp_path):
             .start()
         )
         q.awaitTermination(300)
+        return q
 
     run()
     # restart with the final slice appended: counts must RESUME
     pq.write_table(
         pa.Table.from_pandas(spans.iloc[2 * third :]), str(path / "c.parquet")
     )
-    run()
+    q = run()
     final: dict[tuple, int] = {}
     for service, remote, n in emitted:  # later emissions supersede
         final[(service, remote)] = n
     batch = load_all()["trace_dependency_graph"].fn(spark, sf).collect()
     want = {(r.service, r.remote): r.call_count for r in batch}
     assert final == want
+    # bounded state after the restart: one state row per edge
+    last = [p for p in q.recentProgress if p.numInputRows > 0][-1]
+    assert last.stateOperators[0].numRowsTotal == len(want)
     assert os.path.isdir(str(tmp_path / "dep_ckpt"))
 
 
