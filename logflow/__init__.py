@@ -10,6 +10,9 @@ trace semantics = derived columns; "topology" = composition of DataFrame
 transformations; streaming = the same functions applied to streaming frames.
 """
 
+# First: Python workers import logflow when they unpickle its code, and the
+# zip directory guard must be in place before their next task starts.
+from logflow import pyworker  # noqa: F401
 from logflow.operators.branch import branch
 from logflow.operators.dedup import (
     exact_dedup_groups,

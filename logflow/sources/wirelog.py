@@ -37,7 +37,7 @@ import os
 import struct
 import uuid
 from collections.abc import Iterator
-from itertools import islice
+from itertools import accumulate, chain, islice
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -176,13 +176,31 @@ def _arrow_batches(frames: Iterator[Frame]):
     for batch and stream readers) rather than per-frame tuples moves the
     Python->JVM row boundary to once per batch: the row-at-a-time generator
     made ``source_custom_wirelog`` the slowest non-iterative bench query
-    (2.8 s). A task buffers one batch, never a whole file."""
+    (2.8 s). A task buffers one batch, never a whole file. The ``headers``
+    column is assembled from flat key and value arrays plus list offsets:
+    converting per-header tuples to structs took about as long as parsing."""
     import pyarrow as pa
 
     schema = _arrow_schema()
+    headers_type = schema.field("headers").type
+    header_fields = list(headers_type.value_type)
     while chunk := list(islice(frames, _ARROW_BATCH_ROWS)):
+        keys, values, headers = zip(*chunk)
+        flat = list(chain.from_iterable(headers))
+        entries = pa.StructArray.from_arrays(
+            [
+                pa.array([k for k, _ in flat], type=pa.string()),
+                pa.array([v for _, v in flat], type=pa.binary()),
+            ],
+            fields=header_fields,
+        )
+        offsets = pa.array([0, *accumulate(map(len, headers))], type=pa.int32())
         yield pa.RecordBatch.from_arrays(
-            [pa.array(col, type=f.type) for col, f in zip(zip(*chunk), schema)],
+            [
+                pa.array(keys, type=pa.binary()),
+                pa.array(values, type=pa.binary()),
+                pa.ListArray.from_arrays(offsets, entries, type=headers_type),
+            ],
             schema=schema,
         )
 
