@@ -11,7 +11,9 @@ under micro-batch replay, so this engine derives span ids DETERMINISTICALLY:
 Determinism preserves the reference's observable contract ("same traceId,
 new spanId per stage") while making every test reproducible and every
 streaming retry idempotent. md5 is used (not sha2) because the DuckDB
-oracle computes the identical value.
+oracle computes the identical value: the oracles splice the same id
+fragments, which parse alike in both engines (``||`` gives NULL for a
+NULL seed in both; ``concat_ws`` skips NULLs in both).
 
 Why every helper emits ONE Spark SQL expression string: building a plan is
 bound by Py4J, the Python-to-JVM bridge, not by the JVM. Each ``F.*`` call
@@ -45,12 +47,12 @@ def sql_str(value: str) -> str:
 
 def trace_id_sql(seed: str) -> str:
     """128-bit (32 hex) deterministic trace id from a seed expression."""
-    return f"md5(concat('trace:', cast({seed} as string)))"
+    return f"md5('trace:' || cast({seed} as string))"
 
 
 def span_id_sql(seed: str) -> str:
     """64-bit (16 hex) deterministic root span id from a seed expression."""
-    return f"substring(md5(concat('span:', cast({seed} as string))), 1, {SPAN_ID_HEX})"
+    return f"substring(md5('span:' || cast({seed} as string)), 1, {SPAN_ID_HEX})"
 
 
 def child_span_id_sql(trace_id: str, stage: str, offset: str) -> str:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from logflow.functions.hashing import md5_int
 from logflow.functions.text import char_ngrams, tokenize, word_shingles
 from logflow.operators.cache import track
 
@@ -237,7 +238,7 @@ def simhash_16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.col(id_col).alias("doc_id"),
         F.explode(tokenize(F.col(text_col))).alias("tok"),
     )
-    h16 = F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 4), 16, 10).cast("int")
+    h16 = F.expr(md5_int("tok", digits=4)).cast("int")
     sums = toks.withColumn("h16", h16).groupBy("doc_id").agg(
         *[
             F.sum(F.when(F.col("h16").bitwiseAND(F.lit(1 << j)) != 0, 1).otherwise(-1)).alias(

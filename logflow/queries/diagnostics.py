@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from logflow.functions.hashing import md5_int
 from logflow.operators.cache import track
 from logflow.queries import register
 from logflow.sources.tables import load_table
@@ -1987,30 +1988,29 @@ def dq_functional_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("fd")
 
 
+#: dq_table_fingerprint's canonical row key per table (numeric columns
+#: go through ROUND(x, 2), which renders identically in both engines).
+_FP_KEYS = {
+    "orders": "concat_ws('|', cast(o_orderkey as string), cast(o_custkey as string), "
+    "o_orderstatus, cast(round(o_totalprice, 2) as string))",
+    "customer": "concat_ws('|', cast(c_custkey as string), cast(c_nationkey as string), "
+    "c_mktsegment)",
+    "nation": "concat_ws('|', cast(n_nationkey as string), n_name, cast(n_regionkey as string))",
+}
+_FP_ORACLE = (
+    "WITH f AS (\n"
+    + "\n  UNION ALL\n".join(
+        f"  SELECT '{t}' AS tbl, CAST(COUNT(*) AS BIGINT) AS n_rows,\n"
+        f"         CAST(SUM({md5_int(k, duck=True)}) AS BIGINT) AS fingerprint\n  FROM {t}"
+        for t, k in _FP_KEYS.items()
+    )
+    + ")\nSELECT tbl, n_rows, fingerprint FROM f ORDER BY tbl\n"
+)
+
+
 @register(
     "dq_table_fingerprint",
-    """
-WITH f AS (
-  SELECT 'orders' AS tbl, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(SUM(CAST(concat('0x', substr(md5(concat(
-               CAST(o_orderkey AS VARCHAR), '|', CAST(o_custkey AS VARCHAR), '|',
-               o_orderstatus, '|', CAST(ROUND(o_totalprice, 2) AS VARCHAR))), 1, 8))
-             AS BIGINT)) AS BIGINT) AS fingerprint
-  FROM orders
-  UNION ALL
-  SELECT 'customer', CAST(COUNT(*) AS BIGINT),
-         CAST(SUM(CAST(concat('0x', substr(md5(concat(
-               CAST(c_custkey AS VARCHAR), '|', CAST(c_nationkey AS VARCHAR), '|',
-               c_mktsegment)), 1, 8)) AS BIGINT)) AS BIGINT)
-  FROM customer
-  UNION ALL
-  SELECT 'nation', CAST(COUNT(*) AS BIGINT),
-         CAST(SUM(CAST(concat('0x', substr(md5(concat(
-               CAST(n_nationkey AS VARCHAR), '|', n_name, '|',
-               CAST(n_regionkey AS VARCHAR))), 1, 8)) AS BIGINT)) AS BIGINT)
-  FROM nation)
-SELECT tbl, n_rows, fingerprint FROM f ORDER BY tbl
-""",
+    _FP_ORACLE,
     doc="Order-independent TABLE FINGERPRINT for cross-replica / "
     "cross-engine reconciliation: each row canonicalizes to a "
     "delimited string, hashes to md5, and the first 8 hex digits "
@@ -2025,54 +2025,15 @@ SELECT tbl, n_rows, fingerprint FROM f ORDER BY tbl
     "possible full-table audit at 100 TB — one scan, no shuffle.",
 )
 def dq_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def fp(df: DataFrame, tbl: str, parts: list) -> DataFrame:
-        h = F.conv(F.substring(F.md5(F.concat_ws("|", *parts)), 1, 8), 16, 10).cast(
-            "long"
-        )
-        return df.agg(
+    out = None
+    for tbl, key in _FP_KEYS.items():
+        fp = load_table(spark, tbl, sf_dir).agg(
             F.lit(tbl).alias("tbl"),
             F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(h).cast("long").alias("fingerprint"),
+            F.sum(F.expr(md5_int(key))).cast("long").alias("fingerprint"),
         )
-
-    orders = load_table(spark, "orders", sf_dir)
-    cust = load_table(spark, "customer", sf_dir)
-    nat = load_table(spark, "nation", sf_dir)
-    return (
-        fp(
-            orders,
-            "orders",
-            [
-                F.col("o_orderkey").cast("string"),
-                F.col("o_custkey").cast("string"),
-                F.col("o_orderstatus"),
-                F.round("o_totalprice", 2).cast("string"),
-            ],
-        )
-        .unionByName(
-            fp(
-                cust,
-                "customer",
-                [
-                    F.col("c_custkey").cast("string"),
-                    F.col("c_nationkey").cast("string"),
-                    F.col("c_mktsegment"),
-                ],
-            )
-        )
-        .unionByName(
-            fp(
-                nat,
-                "nation",
-                [
-                    F.col("n_nationkey").cast("string"),
-                    F.col("n_name"),
-                    F.col("n_regionkey").cast("string"),
-                ],
-            )
-        )
-        .orderBy("tbl")
-    )
+        out = fp if out is None else out.unionByName(fp)
+    return out.orderBy("tbl")
 
 
 # Poisson(1) inverse-CDF thresholds (cumulative e^-1/k! for k = 0..6),
@@ -2090,6 +2051,7 @@ _POIS1_CDF = [
     "0.999916758850712",
 ]
 _BOOT_B = 32
+_BOOT_KEY = "'boot:' || cast(event_id as string) || ':' || cast(b as string)"
 
 
 def _pois_case_sql(u: str) -> str:
@@ -2108,9 +2070,7 @@ WITH base AS (
   FROM events),
 u AS (
   SELECT event_type, x_cents, r.b,
-         CAST(concat('0x', substr(md5(concat('boot:', CAST(event_id AS VARCHAR),
-              ':', CAST(r.b AS VARCHAR))), 1, 8)) AS BIGINT)
-           / 4294967296.0 AS u
+         {md5_int(_BOOT_KEY, duck=True)} / 4294967296.0 AS u
   FROM base CROSS JOIN range(0, {_BOOT_B}) AS r(b)),
 reps AS (
   SELECT event_type, b,
@@ -2167,25 +2127,7 @@ def diag_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "x_cents",
         "b",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("boot:"),
-                            F.col("event_id").cast("string"),
-                            F.lit(":"),
-                            F.col("b").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            / F.lit(4294967296.0)
-        ).alias("u"),
+        (F.expr(md5_int(_BOOT_KEY)) / F.lit(4294967296.0)).alias("u"),
     )
     w = F.expr(_pois_case_sql("u"))
     reps = u.groupBy("event_type", "b").agg(
@@ -2569,15 +2511,15 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: common oracle prelude for the A/B experiment queries: per-user pre/post
 #: exact cents + a deterministic md5 arm assignment, split at the exact
 #: micros midpoint of the event stream.
-_AB_USER_SQL = """
+_ARM_KEY = "'arm:' || cast(user_id as string)"
+_AB_USER_SQL = f"""
 e AS (SELECT user_id, value,
              date_diff('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) AS tsm
       FROM events),
 mid AS (SELECT (MIN(tsm) + MAX(tsm)) // 2 AS m FROM e),
 u AS (
   SELECT user_id,
-         CAST(concat('0x', substr(md5(concat('arm:', CAST(user_id AS VARCHAR))),
-              1, 8)) AS BIGINT) % 2 AS arm,
+         {md5_int(_ARM_KEY, duck=True)} % 2 AS arm,
          CAST(COALESCE(SUM(CASE WHEN tsm < m THEN
               CAST(ROUND(value, 4) AS DECIMAL(14,4)) END), 0) * 100 AS BIGINT)
            AS pre,
@@ -2711,16 +2653,7 @@ def _ab_user_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tsm"),
     )
     mid = e.agg(F.expr("(MIN(tsm) + MAX(tsm)) DIV 2").alias("m"))
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arm:"), F.col("user_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = F.expr(md5_int(_ARM_KEY)) % 2
     dec = F.round(F.col("value"), 4).cast("decimal(14,4)")
     return (
         e.crossJoin(F.broadcast(mid))
@@ -4444,8 +4377,7 @@ WITH e AS (
 mid AS (SELECT (MIN(tsm) + MAX(tsm)) // 2 AS m FROM e),
 u AS (
   SELECT event_type, user_id,
-         CAST(concat('0x', substr(md5(concat('arm:', CAST(user_id AS VARCHAR))),
-              1, 8)) AS BIGINT) % 2 AS arm,
+         {md5_int(_ARM_KEY, duck=True)} % 2 AS arm,
          CAST(SUM(CAST(ROUND(value, 4) AS DECIMAL(14,4))) * 100 AS BIGINT) AS post
   FROM e CROSS JOIN mid WHERE tsm >= m GROUP BY event_type, user_id),
 g AS (
@@ -4519,16 +4451,7 @@ def ab_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tsm"),
     )
     mid = e.agg(F.expr("(MIN(tsm) + MAX(tsm)) DIV 2").alias("m"))
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arm:"), F.col("user_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = F.expr(md5_int(_ARM_KEY)) % 2
     u = (
         e.crossJoin(F.broadcast(mid))
         .filter(F.col("tsm") >= F.col("m"))
@@ -4633,19 +4556,7 @@ def ab_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _PERM_R = 64  # deterministic re-labelings; p-value resolution 1/65
-
-
-def _perm_bit(r: int, *, duck: bool) -> str:
-    """Deterministic 0/1 re-label for replicate ``r`` from md5(user_id)."""
-    if duck:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('perm:{r}:', "
-            f"CAST(user_id AS VARCHAR))), 1, 8)) AS BIGINT) % 2"
-        )
-    return (
-        f"CAST(conv(substring(md5(concat('perm:{r}:', "
-        f"CAST(user_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2"
-    )
+_PERM_KEY = "'perm:{r}:' || cast(user_id as string)"  # replicate r's 0/1 re-label key
 
 
 def _perm_diff(s1: str, n1: str) -> str:
@@ -4659,11 +4570,12 @@ def _perm_diff(s1: str, n1: str) -> str:
 
 
 def _perm_sql() -> str:
+    bits = [f"{md5_int(_PERM_KEY.format(r=r), duck=True)} % 2" for r in range(_PERM_R)]
     reps = ",\n         ".join(
-        f"CAST(SUM(CASE WHEN {_perm_bit(r, duck=True)} = 1 THEN post ELSE 0 END)"
+        f"CAST(SUM(CASE WHEN {bit} = 1 THEN post ELSE 0 END)"
         f" AS BIGINT) AS s1_{r},"
-        f" CAST(SUM({_perm_bit(r, duck=True)}) AS BIGINT) AS n1_{r}"
-        for r in range(_PERM_R)
+        f" CAST(SUM({bit}) AS BIGINT) AS n1_{r}"
+        for r, bit in enumerate(bits)
     )
     extreme = " + ".join(
         f"COALESCE(CASE WHEN abs({_perm_diff(f's1_{r}', f'n1_{r}')})"
@@ -4715,7 +4627,7 @@ def ab_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("arm").cast("long").alias("n1o"),
     ]
     for r in range(_PERM_R):
-        bit = F.expr(_perm_bit(r, duck=False))
+        bit = F.expr(md5_int(_PERM_KEY.format(r=r))) % 2
         aggs.append(
             F.sum(F.when(bit == 1, F.col("post")).otherwise(0))
             .cast("long")
@@ -4955,14 +4867,7 @@ def _dp_noise_case(u32: str) -> str:
     return f"CASE {whens} ELSE 8 END"
 
 
-_DP_U32_DUCK = (
-    "CAST(concat('0x', substr(md5(concat('dp:', event_type, ':', "
-    "CAST(dow AS VARCHAR))), 1, 8)) AS BIGINT)"
-)
-_DP_U32_SPARK = (
-    "CAST(conv(substring(md5(concat('dp:', event_type, ':', "
-    "CAST(dow AS STRING))), 1, 8), 16, 10) AS BIGINT)"
-)
+_DP_KEY = "'dp:' || event_type || ':' || cast(dow as string)"
 
 _DP_ORACLE = f"""
 WITH b AS (
@@ -4973,7 +4878,7 @@ WITH b AS (
   FROM events GROUP BY 1, 2),
 n AS (
   SELECT event_type, dow, true_cnt,
-         CAST({_dp_noise_case(_DP_U32_DUCK)} AS BIGINT) AS noise
+         CAST({_dp_noise_case(md5_int(_DP_KEY, duck=True))} AS BIGINT) AS noise
   FROM b)
 SELECT event_type, dow,
        greatest(true_cnt + noise, 0) AS noisy_cnt,
@@ -5009,7 +4914,7 @@ def privacy_dp_noisy_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("dow"),
     ).groupBy("event_type", "dow").agg(F.count(F.lit(1)).cast("long").alias("true_cnt"))
     n = b.withColumn(
-        "noise", F.expr(_dp_noise_case(_DP_U32_SPARK)).cast("long")
+        "noise", F.expr(_dp_noise_case(md5_int(_DP_KEY))).cast("long")
     )
     return n.select(
         "event_type",

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from logflow.functions.hashing import md5_int
 from logflow.functions.text import LANG_MARKERS, STOPWORDS, char_ngrams, tokenize
 from logflow.operators.cache import track
 from logflow.operators.dedup import (
@@ -197,7 +198,7 @@ WITH toks AS (
   SELECT doc_id, unnest({TOKS}) AS tok FROM documents
 ),
 h AS (
-  SELECT doc_id, CAST(concat('0x', substr(md5(tok), 1, 4)) AS INTEGER) AS h16 FROM toks
+  SELECT doc_id, CAST({md5_int("tok", digits=4, duck=True)} AS INTEGER) AS h16 FROM toks
 ),
 sums AS (
   SELECT doc_id,
@@ -886,12 +887,11 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_hash_weighted",
-    """
+    f"""
 WITH w AS (
   SELECT doc_id, source,
-         CAST(concat('0x', substr(md5(concat('smp:', CAST(doc_id AS VARCHAR))), 1, 8)) AS BIGINT)
-           / 4294967296.0 AS u,
-         0.25 * (1 + CAST(concat('0x', substr(md5(source), 1, 2)) AS BIGINT) % 4) AS wt
+         {md5_int("'smp:' || cast(doc_id as string)", duck=True)} / 4294967296.0 AS u,
+         0.25 * (1 + {md5_int("source", digits=2, duck=True)} % 4) AS wt
   FROM documents
 )
 SELECT source,
@@ -912,13 +912,8 @@ GROUP BY source
 )
 def sample_hash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    u = F.conv(
-        F.substring(F.md5(F.concat(F.lit("smp:"), F.col("doc_id").cast("string"))), 1, 8),
-        16, 10,
-    ).cast("long") / F.lit(4294967296.0)
-    wt = F.lit(0.25) * (
-        F.lit(1) + F.conv(F.substring(F.md5(F.col("source")), 1, 2), 16, 10).cast("long") % 4
-    )
+    u = F.expr(md5_int("'smp:' || cast(doc_id as string)")) / F.lit(4294967296.0)
+    wt = F.lit(0.25) * (F.lit(1) + F.expr(md5_int("source", digits=2)) % 4)
     w = docs.select("source", u.alias("u"), wt.alias("wt"))
     return w.groupBy("source").agg(
         F.round(F.max("wt"), 2).alias("weight"),
@@ -1572,7 +1567,7 @@ def quality_classifier_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH assign AS (
   SELECT doc_id,
          md5(array_to_string(({TOKS})[1:40], ' ')) AS gmd5,
-         CASE WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
+         CASE WHEN CAST({md5_int("cast(doc_id as string)", digits=4, duck=True)}
                    AS INTEGER) % 10 = 0
               THEN 'eval' ELSE 'train' END AS split
   FROM documents
@@ -1581,7 +1576,7 @@ g AS (
   SELECT gmd5,
          CAST(COUNT(*) AS BIGINT) AS n_docs,
          CAST(SUM(CASE WHEN split = 'eval' THEN 1 ELSE 0 END) AS BIGINT) AS n_eval,
-         CASE WHEN CAST(concat('0x', substr(md5(gmd5), 1, 4)) AS INTEGER) % 10 = 0
+         CASE WHEN CAST({md5_int("gmd5", digits=4, duck=True)} AS INTEGER) % 10 = 0
               THEN 'eval' ELSE 'train' END AS healed_split
   FROM assign GROUP BY gmd5
 )
@@ -1612,15 +1607,15 @@ FROM g
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
 
-    def hash_bucket(col):
-        return F.conv(F.substring(F.md5(col.cast("binary")), 1, 4), 16, 10).cast("int") % 10
+    def hash_bucket(key_sql: str):
+        return F.expr(md5_int(key_sql, digits=4)).cast("int") % 10
 
     fingerprint = F.md5(
         F.concat_ws(" ", F.slice(tokenize(F.col("text")), 1, 40)).cast("binary")
     )
     assign = docs.select(
         fingerprint.alias("gmd5"),
-        F.when(hash_bucket(F.col("doc_id").cast("string")) == 0, "eval")
+        F.when(hash_bucket("cast(doc_id as string)") == 0, "eval")
         .otherwise("train")
         .alias("split"),
     )
@@ -1628,7 +1623,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.when(F.col("split") == "eval", 1).otherwise(0)).cast("long").alias("n_eval"),
     )
-    healed_eval = hash_bucket(F.col("gmd5")) == 0
+    healed_eval = hash_bucket("gmd5") == 0
     leaky = (F.col("n_eval") > 0) & (F.col("n_eval") < F.col("n_docs"))
     return g.agg(
         F.count(F.lit(1)).cast("long").alias("n_groups"),
@@ -1896,7 +1891,7 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_importance_resample",
-    """
+    f"""
 WITH nat AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS c
              FROM documents GROUP BY source),
 tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t, CAST(COUNT(*) AS BIGINT) AS k
@@ -1907,9 +1902,8 @@ r AS (SELECT source, c,
       FROM nat CROSS JOIN tot),
 acc AS (
   SELECT d.source, r.c, r.rate,
-         CASE WHEN CAST(concat('0x',
-                substr(md5(concat('rs:', CAST(d.doc_id AS VARCHAR))), 1, 8))
-                AS BIGINT) / 4294967296.0 < r.rate
+         CASE WHEN {md5_int("'rs:' || cast(d.doc_id as string)", duck=True)}
+                / 4294967296.0 < r.rate
               THEN 1 ELSE 0 END AS keep
   FROM documents d JOIN r ON d.source = r.source
 )
@@ -1949,10 +1943,7 @@ def corpus_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("k").cast("double") * F.col("c").cast("double")),
     )
     r = nat.crossJoin(F.broadcast(tot)).select("source", "c", rate.alias("rate"))
-    u = F.conv(
-        F.substring(F.md5(F.concat(F.lit("rs:"), F.col("doc_id").cast("string"))), 1, 8),
-        16, 10,
-    ).cast("long") / F.lit(4294967296.0)
+    u = F.expr(md5_int("'rs:' || cast(doc_id as string)")) / F.lit(4294967296.0)
     acc = docs.join(F.broadcast(r), "source").select(
         "source", "c", "rate", F.when(u < F.col("rate"), 1).otherwise(0).alias("keep")
     )
@@ -2168,13 +2159,17 @@ def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(corpus, queries, cent, "vec_id", "embedding", k=3, nprobe=2)
 
 
+#: Efraimidis-Spirakis uniform key of a doc (sample_weighted_es and
+#: sample_stratified_topk_es)
+_ES_KEY = "'es:' || cast(doc_id as string)"
+
+
 @register(
     "sample_weighted_es",
-    """
+    f"""
 WITH k AS (
   SELECT doc_id, source, n_chars,
-         -ln((CAST(concat('0x', substr(md5(concat('es:', CAST(doc_id AS VARCHAR))), 1, 8))
-                   AS BIGINT) + 1) / 4294967297.0)
+         -ln(({md5_int(_ES_KEY, duck=True)} + 1) / 4294967297.0)
            / CAST(n_chars AS DOUBLE) AS es_key
   FROM documents)
 SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars,
@@ -2197,11 +2192,7 @@ LIMIT 50
 )
 def sample_weighted_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("es:"), F.col("doc_id").cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
+    h = F.expr(md5_int(_ES_KEY))
     es_key = -F.log((h + 1) / F.lit(4294967297.0)) / F.col("n_chars").cast("double")
     return (
         docs.select(
@@ -2858,11 +2849,10 @@ def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_stratified_topk_es",
-    """
+    f"""
 WITH k AS (
   SELECT doc_id, source, n_chars,
-         -ln((CAST(concat('0x', substr(md5(concat('es:', CAST(doc_id AS VARCHAR))), 1, 8))
-                   AS BIGINT) + 1) / 4294967297.0)
+         -ln(({md5_int(_ES_KEY, duck=True)} + 1) / 4294967297.0)
            / CAST(n_chars AS DOUBLE) AS es_key
   FROM documents),
 r AS (
@@ -2890,11 +2880,7 @@ ORDER BY source, rk
 )
 def sample_stratified_topk_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("es:"), F.col("doc_id").cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
+    h = F.expr(md5_int(_ES_KEY))
     es_key = -F.log((h + 1) / F.lit(4294967297.0)) / F.col("n_chars").cast("double")
     w = Window.partitionBy("source").orderBy("es_key", "doc_id")
     return (

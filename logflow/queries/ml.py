@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from logflow.functions.hashing import md5_int
 from logflow.functions.text import tokenize
 from logflow.queries import register
 from logflow.sources.tables import load_table
@@ -686,7 +687,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_feature_hashing",
-    r"""
+    rf"""
 WITH tok AS (
   SELECT doc_id,
          unnest(list_filter(string_split_regex(lower(text), '\s+'),
@@ -694,7 +695,7 @@ WITH tok AS (
   FROM documents),
 hashed AS (
   SELECT doc_id, tok,
-         CAST(('0x' || substr(md5(tok), 1, 8))::BIGINT % 64 AS BIGINT) AS bucket
+         CAST({md5_int("tok", duck=True)} % 64 AS BIGINT) AS bucket
   FROM tok)
 SELECT bucket,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -722,7 +723,7 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hashed = tok.withColumn(
         "bucket",
-        (F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long") % 64),
+        F.expr(md5_int("tok")) % 64,
     )
     return (
         hashed.groupBy("bucket")
@@ -1782,6 +1783,7 @@ def ml_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _LC_FRACS = [25, 50, 75, 100]
+_LC_KEY = "'lc:' || cast(doc_id as string)"  # tier hash of a training doc
 
 
 def _lc_sql() -> str:
@@ -1795,9 +1797,7 @@ WITH train0 AS (SELECT doc_id, lang, text FROM documents WHERE doc_id % 5 <> 0),
 test AS (SELECT doc_id, lang, text FROM documents WHERE doc_id % 5 = 0),
 tr AS (
   SELECT doc_id, lang, text, {tiers} AS tier
-  FROM (SELECT *, CAST(concat('0x', substr(md5(concat('lc:',
-               CAST(doc_id AS VARCHAR))), 1, 8)) AS BIGINT) % 100 AS h
-        FROM train0)),
+  FROM (SELECT *, {md5_int(_LC_KEY, duck=True)} % 100 AS h FROM train0)),
 fr AS (SELECT * FROM (VALUES {fracs}) AS t(frac)),
 ttok AS (SELECT tier, lang, unnest({TOKS}) AS tok FROM tr),
 cwt AS (SELECT tier, lang, tok, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -1883,16 +1883,7 @@ ORDER BY train_pct
 )
 def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("lc:"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = F.expr(md5_int(_LC_KEY)) % 100
     tier = (
         F.when(F.col("h") < 25, 25)
         .when(F.col("h") < 50, 50)

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logflow.functions.trace import trace_id_sql
 from logflow.operators.multimodal import fake_features, frame_sample, media_from_documents
 from logflow.queries import register
 from logflow.sources.tables import load_table
@@ -91,9 +92,9 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "trace_hash_sampling",
-    """
+    f"""
 WITH records AS (
-  SELECT event_id, md5('trace:' || CAST(event_id AS VARCHAR)) AS trace_id FROM events
+  SELECT event_id, {trace_id_sql("event_id")} AS trace_id FROM events
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_sampled,
        CAST(MIN(event_id) AS BIGINT) AS first_event
@@ -105,8 +106,6 @@ WHERE substr(trace_id, 1, 2) < '1a'
     "scale-correct way to sample a distributed trace stream",
 )
 def trace_hash_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from logflow.functions.trace import trace_id_sql
-
     ev = load_table(spark, "events", sf_dir)
     sampled = ev.select("event_id", F.expr(trace_id_sql("event_id")).alias("trace_id")).filter(
         F.substring("trace_id", 1, 2) < "1a"

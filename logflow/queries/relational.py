@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from logflow.functions.hashing import md5_int
 from logflow.functions.money import dec, money
 from logflow.operators.joins import asof_join, broadcast_dim_join
 from logflow.queries import register
@@ -5364,32 +5365,20 @@ _GEO_CELL = 125_000  # grid cell width -> 8x8 cells
 _GEO_K = 3
 
 
-def _geo_coord(tag: str, key: str, *, duck: bool) -> str:
-    if duck:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{tag}:', "
-            f"CAST({key} AS VARCHAR))), 1, 8)) AS BIGINT) % {_GEO_DOMAIN}"
-        )
-    return (
-        f"CAST(conv(substring(md5(concat('{tag}:', "
-        f"CAST({key} AS STRING))), 1, 8), 16, 10) AS BIGINT) % {_GEO_DOMAIN}"
-    )
-
-
 @register(
     "join_spatial_grid_knn",
     f"""
 WITH cust AS (
   SELECT c_custkey,
-         {_geo_coord('gx', 'c_custkey', duck=True)} AS x,
-         {_geo_coord('gy', 'c_custkey', duck=True)} AS y
+         {md5_int("'gx:' || cast(c_custkey as string)", duck=True)} % {_GEO_DOMAIN} AS x,
+         {md5_int("'gy:' || cast(c_custkey as string)", duck=True)} % {_GEO_DOMAIN} AS y
   FROM customer),
 cc AS (SELECT c_custkey, x, y, x // {_GEO_CELL} AS cx, y // {_GEO_CELL} AS cy
        FROM cust),
 supp AS (
   SELECT s_suppkey,
-         {_geo_coord('gx', 's_suppkey', duck=True)} AS x,
-         {_geo_coord('gy', 's_suppkey', duck=True)} AS y
+         {md5_int("'gx:' || cast(s_suppkey as string)", duck=True)} % {_GEO_DOMAIN} AS x,
+         {md5_int("'gy:' || cast(s_suppkey as string)", duck=True)} % {_GEO_DOMAIN} AS y
   FROM supplier),
 sc AS (SELECT s_suppkey, x, y, x // {_GEO_CELL} AS cx, y // {_GEO_CELL} AS cy
        FROM supp),
@@ -5434,8 +5423,8 @@ ORDER BY s_suppkey, rank
 def join_spatial_grid_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, "customer", sf_dir).select(
         "c_custkey",
-        F.expr(_geo_coord("gx", "c_custkey", duck=False)).alias("x"),
-        F.expr(_geo_coord("gy", "c_custkey", duck=False)).alias("y"),
+        (F.expr(md5_int("'gx:' || cast(c_custkey as string)")) % _GEO_DOMAIN).alias("x"),
+        (F.expr(md5_int("'gy:' || cast(c_custkey as string)")) % _GEO_DOMAIN).alias("y"),
     )
     cc = cust.select(
         "c_custkey",
@@ -5446,8 +5435,8 @@ def join_spatial_grid_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     supp = load_table(spark, "supplier", sf_dir).select(
         "s_suppkey",
-        F.expr(_geo_coord("gx", "s_suppkey", duck=False)).alias("x"),
-        F.expr(_geo_coord("gy", "s_suppkey", duck=False)).alias("y"),
+        (F.expr(md5_int("'gx:' || cast(s_suppkey as string)")) % _GEO_DOMAIN).alias("x"),
+        (F.expr(md5_int("'gy:' || cast(s_suppkey as string)")) % _GEO_DOMAIN).alias("y"),
     )
     sc = supp.select(
         "s_suppkey",
@@ -5501,18 +5490,6 @@ _BLOOM_BITS = 2048  # bits per file bitmap
 _BLOOM_PROBE_MOD = 250  # deterministic probe keys: p_partkey % 250 == 0
 
 
-def _bloom_bit(tag: str, key: str, *, duck: bool) -> str:
-    if duck:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{tag}:', "
-            f"CAST({key} AS VARCHAR))), 1, 8)) AS BIGINT) % {_BLOOM_BITS}"
-        )
-    return (
-        f"CAST(conv(substring(md5(concat('{tag}:', "
-        f"CAST({key} AS STRING))), 1, 8), 16, 10) AS BIGINT) % {_BLOOM_BITS}"
-    )
-
-
 @register(
     "scan_bloom_skipping_audit",
     f"""
@@ -5522,14 +5499,14 @@ rows_ AS (
   FROM lineitem CROSS JOIN mx),
 fbits AS (
   SELECT DISTINCT f, b FROM (
-    SELECT f, {_bloom_bit('b1', 'k', duck=True)} AS b FROM rows_
+    SELECT f, {md5_int("'b1:' || cast(k as string)", duck=True)} % {_BLOOM_BITS} AS b FROM rows_
     UNION ALL
-    SELECT f, {_bloom_bit('b2', 'k', duck=True)} AS b FROM rows_)),
+    SELECT f, {md5_int("'b2:' || cast(k as string)", duck=True)} % {_BLOOM_BITS} AS b FROM rows_)),
 truth AS (SELECT DISTINCT f, k FROM rows_),
 probes AS (
   SELECT DISTINCT p_partkey AS p,
-         {_bloom_bit('b1', 'p_partkey', duck=True)} AS b1,
-         {_bloom_bit('b2', 'p_partkey', duck=True)} AS b2
+         {md5_int("'b1:' || cast(p_partkey as string)", duck=True)} % {_BLOOM_BITS} AS b1,
+         {md5_int("'b2:' || cast(p_partkey as string)", duck=True)} % {_BLOOM_BITS} AS b2
   FROM part WHERE p_partkey % {_BLOOM_PROBE_MOD} = 0),
 hits AS (
   SELECT pr.p, h1.f
@@ -5591,11 +5568,10 @@ def scan_bloom_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint — the duplicated subtree is the fact-scale distinct, and
     # checkpoint also truncates it out of the static plan (r10 rule)
     truth = truth.localCheckpoint(eager=True)
+    b1, b2 = (F.expr(md5_int(f"'{t}:' || cast(k as string)")) % _BLOOM_BITS for t in ("b1", "b2"))
     fbits = (
-        truth.select("f", F.expr(_bloom_bit("b1", "k", duck=False)).alias("b"))
-        .unionByName(
-            truth.select("f", F.expr(_bloom_bit("b2", "k", duck=False)).alias("b"))
-        )
+        truth.select("f", b1.alias("b"))
+        .unionByName(truth.select("f", b2.alias("b")))
         .distinct()
     )
     # bounded: <= files x bits rows; eager — feeds the double semi-join
@@ -5606,8 +5582,8 @@ def scan_bloom_skipping_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         part.filter(F.col("p_partkey") % _BLOOM_PROBE_MOD == 0)
         .select(
             F.col("p_partkey").alias("p"),
-            F.expr(_bloom_bit("b1", "p_partkey", duck=False)).alias("b1"),
-            F.expr(_bloom_bit("b2", "p_partkey", duck=False)).alias("b2"),
+            (F.expr(md5_int("'b1:' || cast(p_partkey as string)")) % _BLOOM_BITS).alias("b1"),
+            (F.expr(md5_int("'b2:' || cast(p_partkey as string)")) % _BLOOM_BITS).alias("b2"),
         )
         .distinct()
     )

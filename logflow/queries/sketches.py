@@ -26,21 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from logflow.functions.hashing import md5_int
 from logflow.queries import register
 from logflow.sources.tables import load_table
 
 # --------------------------------------------------------------------------
-# shared md5 → integer snippets (dialect-parameterized SQL text)
+# shared SQL snippets (dialect-parameterized text)
 # --------------------------------------------------------------------------
-
-
-def _h32(expr_s: str, salt: str, duck: bool) -> str:
-    """32-bit uniform hash of a string expression, identical in both
-    engines: first 8 hex chars of md5 (the widest prefix whose exact
-    int64 SUM survives ~2e9 rows — CLAUDE.md)."""
-    if duck:
-        return f"CAST(concat('0x', substr(md5(concat('{salt}', {expr_s})), 1, 8)) AS BIGINT)"
-    return f"CAST(conv(substr(md5(concat('{salt}', {expr_s})), 1, 8), 16, 10) AS BIGINT)"
 
 
 def _bitlen_case(col: str, bits: int) -> str:
@@ -69,8 +61,7 @@ _HLL_NUMER = _HLL_ALPHA * _HLL_M * _HLL_M * float(1 << _HLL_RHO_MAX)
 
 
 def _hll_sql(duck: bool) -> str:
-    key = "CAST(user_id AS VARCHAR)" if duck else "CAST(user_id AS STRING)"
-    h32 = _h32(key, "hll:", duck)
+    h32 = md5_int("'hll:' || cast(user_id as string)", duck=duck)
     suffix = f"({h32} % {1 << _HLL_SUFFIX_BITS})"
     rho = f"({_HLL_RHO_MAX} - ({_bitlen_case(suffix, _HLL_SUFFIX_BITS)}))"
     shift = (
@@ -165,8 +156,8 @@ _CM_D = 4  # hash rows
 
 
 def _cm_idx(duck: bool, r: int) -> str:
-    key = "CAST(l_partkey AS VARCHAR)" if duck else "CAST(l_partkey AS STRING)"
-    return f"({_h32(key, f'cm{r}:', duck)} % {_CM_W})"
+    h32 = md5_int(f"'cm{r}:' || cast(l_partkey as string)", duck=duck)
+    return f"({h32} % {_CM_W})"
 
 
 def _cm_sql(duck: bool) -> str:
@@ -233,16 +224,7 @@ def sketch_countmin_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = track(load_table(spark, "lineitem", sf_dir).select("l_partkey").persist())
     li.count()  # consumers: n agg, counter agg, keys distinct, verify join
-    key = F.col("l_partkey").cast("string")
-
-    def _idx(r: int):
-        return (
-            F.conv(F.substring(F.md5(F.concat(F.lit(f"cm{r}:"), key)), 1, 8), 16, 10)
-            .cast("long")
-            .__mod__(_CM_W)
-        )
-
-    idx = [_idx(r).alias(f"idx{r}") for r in range(_CM_D)]
+    idx = [F.expr(_cm_idx(False, r)).alias(f"idx{r}") for r in range(_CM_D)]
     # ALL _CM_D counter rows in ONE shuffle: explode each row into its
     # (hash_row, counter_idx) pairs and aggregate by the pair — map-side
     # combine bounds the shuffle at _CM_D x _CM_W counters per task,
@@ -253,7 +235,7 @@ def sketch_countmin_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(
                 F.array(
                     *[
-                        F.struct(F.lit(r).alias("r"), _idx(r).alias("idx"))
+                        F.struct(F.lit(r).alias("r"), F.expr(_cm_idx(False, r)).alias("idx"))
                         for r in range(_CM_D)
                     ]
                 )

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from logflow.functions.hashing import md5_int
 from logflow.queries import register
 from logflow.sources.tables import load_table
 
@@ -2841,13 +2842,13 @@ def ts_allen_interval_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # survival machinery: do the md5-arm cohorts churn at the same rate?
 # --------------------------------------------------------------------------
 
-_LOGRANK_SQL = """
+_ARM_KEY = "'arm:' || cast(user_id as string)"  # the A/B suite's arm hash key
+_LOGRANK_SQL = f"""
 WITH u AS (
   SELECT user_id, MIN(ts) AS fs, MAX(ts) AS ls FROM events GROUP BY user_id),
 g AS (SELECT MAX(ls) AS study_end FROM u),
 s AS (
-  SELECT CAST(concat('0x', substr(md5(concat('arm:', CAST(user_id AS VARCHAR))),
-              1, 8)) AS BIGINT) % 2 AS arm,
+  SELECT {md5_int(_ARM_KEY, duck=True)} % 2 AS arm,
          date_diff('day', fs, ls) AS t,
          CASE WHEN ls > study_end - INTERVAL 7 DAY THEN 0 ELSE 1 END AS observed
   FROM u CROSS JOIN g),
@@ -2919,16 +2920,7 @@ def ts_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     u = ev.groupBy("user_id").agg(F.min("ts").alias("fs"), F.max("ts").alias("ls"))
     g = u.agg(F.max("ls").alias("study_end"))
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arm:"), F.col("user_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = F.expr(md5_int(_ARM_KEY)) % 2
     s = u.crossJoin(F.broadcast(g)).select(
         arm.alias("arm"),
         F.expr("datediff(ls, fs)").cast("long").alias("t"),

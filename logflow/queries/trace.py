@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logflow.functions.headers import header_value_str_sql
+from logflow.functions.trace import child_span_id_sql, span_id_sql, trace_id_sql
 from logflow.operators.topology import (
     MESSAGEID,
     TRACE_ID,
@@ -27,34 +28,40 @@ from logflow.sources.records import records_from_events
 from logflow.sources.tables import load_table
 
 # --- shared oracle CTEs (mirror of records_from_events / spans_from_records) ---
+# The ids are the Spark side's own SQL fragments (logflow.functions.trace,
+# dialect-neutral); the topology around them is restated independently.
 
-RECORDS_CTE = """
+_SET, _CONSUME, _SEND = (
+    child_span_id_sql("trace_id", stage, "off") for stage in ("set", "consume", "send")
+)
+
+RECORDS_CTE = f"""
 records AS (
   SELECT
     'user-' || CAST(user_id AS VARCHAR) AS key,
     CAST(FLOOR(value) AS BIGINT) AS value,
     event_id AS off,
     ts,
-    md5('trace:' || CAST(event_id AS VARCHAR)) AS trace_id,
-    substr(md5('span:' || CAST(event_id AS VARCHAR)), 1, 16) AS root_span_id
+    {trace_id_sql("event_id")} AS trace_id,
+    {span_id_sql("event_id")} AS root_span_id
   FROM events
 )
 """
 
-ENRICHED_CTE = """
+ENRICHED_CTE = f"""
 enriched AS (
   SELECT r.*,
-    substr(md5(trace_id || ':set:' || CAST(off AS VARCHAR)), 1, 16) AS span_id,
+    {_SET} AS span_id,
     'messageid_' || CAST(value AS VARCHAR) AS messageid,
     CASE WHEN value % 2 = 0 THEN 'even-numbers' ELSE 'odd-numbers' END AS sink_topic
   FROM records r
 )
 """
 
-SPANS_CTE = """
+SPANS_CTE = f"""
 spans AS (
   SELECT trace_id,
-         substr(md5(trace_id || ':consume:' || CAST(off AS VARCHAR)), 1, 16) AS span_id,
+         {_CONSUME} AS span_id,
          root_span_id AS parent_id,
          'consume' AS name,
          'numbers-app' AS service,
@@ -65,8 +72,8 @@ spans AS (
   FROM records
   UNION ALL
   SELECT trace_id,
-         substr(md5(trace_id || ':set:' || CAST(off AS VARCHAR)), 1, 16),
-         substr(md5(trace_id || ':consume:' || CAST(off AS VARCHAR)), 1, 16),
+         {_SET},
+         {_CONSUME},
          'set', 'numbers-app', NULL,
          ts + INTERVAL 1 MILLISECOND,
          CAST((value * 7 + off * 13 + 101) % 5000 + 50 AS BIGINT),
@@ -74,8 +81,8 @@ spans AS (
   FROM records
   UNION ALL
   SELECT trace_id,
-         substr(md5(trace_id || ':send:' || CAST(off AS VARCHAR)), 1, 16),
-         substr(md5(trace_id || ':set:' || CAST(off AS VARCHAR)), 1, 16),
+         {_SEND},
+         {_SET},
          'send', 'numbers-app', 'kafka',
          ts + INTERVAL 2 MILLISECOND,
          CAST((value * 7 + off * 13 + 202) % 5000 + 50 AS BIGINT),
@@ -110,7 +117,7 @@ SELECT key, value,
        CASE WHEN value % 2 = 0 THEN 'even-numbers' ELSE 'odd-numbers' END AS topic,
        trace_id,
        root_span_id AS parent_span_id,
-       substr(md5(trace_id || ':set:' || CAST(off AS VARCHAR)), 1, 16) AS span_id,
+       {_SET} AS span_id,
        'messageid_' || CAST(value AS VARCHAR) AS messageid
 FROM records
 WHERE value % 2 {"=" if parity == "even" else "<>"} 0

@@ -8,7 +8,7 @@ from types import SimpleNamespace
 import pytest
 
 from tests.conftest import REPO
-from tools.harness import plan, plan_stats, run_each, select
+from tools.harness import arrow_python_nodes, plan, plan_stats, run_each, select
 
 
 class _Query:
@@ -85,6 +85,24 @@ def test_plan_stats_repeats_and_final_plan():
     stats = plan_stats(text)
     assert stats["nodes"]["Project"] == 1
     assert stats["nodes"]["WholeStageCodegen"] == 1
+
+
+def test_arrow_python_nodes_cover_cogrouped_and_arrow_grouped_kinds():
+    # the final plans of ks_click_purchase_drift (cogroup -> applyInPandas)
+    # and diag_group_median_arrow (grouped Arrow UDF), cut to the Python
+    # nodes; BatchEvalPython pickles rows and is not Arrow-batched
+    text = (
+        "== Physical Plan ==\n* Project (4)\n+- FlatMapCoGroupsInPandas (3)\n"
+        "   :- FlatMapGroupsInArrow (1)\n   +- BatchEvalPython (2)\n\n\n"
+        "(1) FlatMapGroupsInArrow\nOutput [1]: [x#1]\n\n"
+        "(2) BatchEvalPython\nOutput [1]: [y#2]\n\n"
+        "(3) FlatMapCoGroupsInPandas\nOutput [1]: [z#3]\n\n"
+        "(4) Project [codegen id : 1]\nOutput [1]: [z#3]\n"
+    )
+    nodes = plan_stats(text)["nodes"]
+    assert nodes["FlatMapCoGroupsInPandas"] == nodes["FlatMapGroupsInArrow"] == 1
+    assert arrow_python_nodes(nodes) == 2
+    assert arrow_python_nodes(plan_stats("== Physical Plan ==\nProject (1)\n")["nodes"]) == 0
 
 
 def test_audit_smells_are_plan_stats_predicates(spark):

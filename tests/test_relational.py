@@ -1015,12 +1015,17 @@ def test_spatial_grid_knn_is_exact_within_cell_radius(spark, sf_dir):
     cell width of its query point must equal the TRUE brute-force
     nearest customer (candidates are complete inside that radius); ranks
     are dense per supplier and distances nondecreasing."""
+    import hashlib
+
     import numpy as np
 
     from logflow.queries import load_all
-    from logflow.queries.relational import _GEO_CELL, _geo_coord
+    from logflow.queries.relational import _GEO_CELL, _GEO_DOMAIN
     from logflow.sources.tables import load_table
-    from pyspark.sql import functions as F
+
+    def coord(tag: str, key: int) -> int:
+        """The query's md5-derived coordinate, recomputed with hashlib."""
+        return int(hashlib.md5(f"{tag}:{key}".encode()).hexdigest()[:8], 16) % _GEO_DOMAIN
 
     pdf = load_all()["join_spatial_grid_knn"].fn(spark, sf_dir).toPandas()
     assert len(pdf) > 0
@@ -1028,31 +1033,13 @@ def test_spatial_grid_knn_is_exact_within_cell_radius(spark, sf_dir):
         g = g.sort_values("rank")
         assert list(g["rank"]) == list(range(1, len(g) + 1))
         assert (np.diff(g["sqdist"].to_numpy()) >= 0).all()
-    cust = (
-        load_table(spark, "customer", sf_dir)
-        .select(
-            "c_custkey",
-            F.expr(_geo_coord("gx", "c_custkey", duck=False)).alias("x"),
-            F.expr(_geo_coord("gy", "c_custkey", duck=False)).alias("y"),
-        )
-        .toPandas()
-    )
-    supp = (
-        load_table(spark, "supplier", sf_dir)
-        .select(
-            "s_suppkey",
-            F.expr(_geo_coord("gx", "s_suppkey", duck=False)).alias("x"),
-            F.expr(_geo_coord("gy", "s_suppkey", duck=False)).alias("y"),
-        )
-        .toPandas()
-        .set_index("s_suppkey")
-    )
-    cx, cy, ck = (cust["x"].to_numpy(), cust["y"].to_numpy(),
-                  cust["c_custkey"].to_numpy())
+    ck = load_table(spark, "customer", sf_dir).toPandas()["c_custkey"].to_numpy()
+    cx = np.array([coord("gx", k) for k in ck])
+    cy = np.array([coord("gy", k) for k in ck])
     top1 = pdf[pdf["rank"] == 1].set_index("s_suppkey")
     checked = 0
     for sk, row in top1.head(50).iterrows():
-        sx, sy = int(supp.loc[sk, "x"]), int(supp.loc[sk, "y"])
+        sx, sy = coord("gx", sk), coord("gy", sk)
         d2 = (cx - sx) ** 2 + (cy - sy) ** 2
         best = d2.min()
         if best <= _GEO_CELL * _GEO_CELL:

@@ -108,6 +108,18 @@ def _kind(name: str) -> str:
     return " ".join(words[:2]) if words[0] == "Scan" else words[0]
 
 
+#: plan_stats kinds of the operators that run Python over Arrow batches:
+#: every ``*InPandas*`` / ``*InArrow*`` node (map, grouped, cogrouped,
+#: stateful) and the Arrow UDF evaluators (``ArrowEvalPython`` and its
+#: aggregate, window and UDTF forms).  ``BatchEvalPython`` pickles rows.
+_ARROW_PYTHON = re.compile(r"In(?:Pandas|Arrow)|^Arrow\w*Python")
+
+
+def arrow_python_nodes(nodes: Counter) -> int:
+    """How many of plan_stats' ``nodes`` run Python over Arrow batches."""
+    return sum(n for kind, n in nodes.items() if _ARROW_PYTHON.search(kind))
+
+
 def plan_stats(text: str) -> dict:
     """One feature record of a ``formatted`` plan, from its ``(N) Operator``
     detail headers and the tree lines that place those nodes.

@@ -21,7 +21,15 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.harness import GATE_SF_DIR, exit_status, plan, plan_stats, run_each, select  # noqa: E402
+from tools.harness import (  # noqa: E402
+    GATE_SF_DIR,
+    arrow_python_nodes,
+    exit_status,
+    plan,
+    plan_stats,
+    run_each,
+    select,
+)
 
 #: queries worth showing, with a one-line scale story each.
 HEADLINERS: dict[str, str] = {
@@ -300,8 +308,7 @@ def snapshot(spark, name: str, q, sf_dir: str) -> list[str]:
     # section (plan_stats skips the initial one too). Cut at the top-level
     # marker: a cached frame's nested adaptive plan prints its own, earlier.
     executed = re.split(r"^\+- == Initial Plan ==", executed, flags=re.M)[0].rstrip()
-    batched = nodes["ArrowEvalPython"] + nodes["MapInPandas"] + nodes["FlatMapGroupsInPandas"]
-    arrow = "yes" if batched else "no"
+    arrow = "yes" if arrow_python_nodes(nodes) else "no"
     return [
         f"## {name}",
         "",
