@@ -5,10 +5,11 @@ aggregate buffer (counts, sums, distinct sets) is Spark's own streaming
 aggregate in update mode: ``running_totals``, ``distinct_label_counts``
 and ``streaming_dependency_graph``.  Their state lives in the engine's
 state store, each micro-batch stays in the JVM, and the statestore
-reader shows it as ``value.<agg buffer field>``.  ``applyInPandasWithState``
-is kept for the operators whose transitions are not aggregates: the
-funnel automaton, Misra-Gries, the frozen-prefix KS monitor and
-event-time-timeout sessions.
+reader shows it as ``value.<agg buffer field>``.  Pandas state
+(``applyInPandasWithState``, ``GroupStateTimeout.NoTimeout``) is only for
+transitions that depend on arrival order: the funnel automaton,
+Misra-Gries and the frozen-prefix KS monitor.  Gap sessions are Spark's
+native ``session_window`` aggregate (``windows.session_spans``).
 
 Both paths partition state by the grouping key across executors
 (HDFS/RocksDB-backed state store at cluster scale) and keep it
@@ -383,110 +384,4 @@ def streaming_dependency_graph(spans: DataFrame) -> DataFrame:
     )
     return edges.groupBy("service", "remote").agg(
         F.count(F.lit(1)).alias("call_count")
-    )
-
-
-# --------------------------------------------------------------------------
-# Timeout-closed streaming sessions — the ONE stateful surface the other
-# operators here don't exercise: GroupStateTimeout.EventTimeTimeout.
-# Sessions accumulate per key and are EMITTED ONLY WHEN CLOSED, i.e. when
-# the watermark passes last_event + gap — the session_window(ts, gap)
-# semantics maintained with explicit state + timers.
-# --------------------------------------------------------------------------
-
-SESSION_GAP_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("session_start_us", LongType()),
-        StructField("session_end_us", LongType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-_SESSION_STATE = "start_us LONG, end_us LONG, n LONG"
-
-
-def _make_session_updater(gap_us: int):
-    def update(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            start_us, end_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "session_start_us": [start_us],
-                    "session_end_us": [end_us],
-                    "n_events": [n],
-                }
-            )
-            return
-        start_us, end_us, n = state.get if state.exists else (None, None, 0)
-        closed = []
-        for pdf in batches:
-            for ts in sorted(int(x) for x in pdf["ts_us"]):
-                if start_us is None:
-                    start_us, end_us, n = ts, ts, 1
-                elif ts - end_us > gap_us:
-                    closed.append((start_us, end_us, n))
-                    start_us, end_us, n = ts, ts, 1
-                else:
-                    end_us, n = max(end_us, ts), n + 1
-        if start_us is None:
-            # only empty frames and no prior state: nothing to track
-            return
-        state.update((start_us, end_us, n))
-        # close the open session when the WATERMARK passes end + gap;
-        # clamp above the current watermark (Spark rejects timers <= wm,
-        # e.g. a key whose last event is already > gap behind it)
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max((end_us + gap_us) // 1000, wm_ms + 1))
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(closed),
-                    "session_start_us": [c[0] for c in closed],
-                    "session_end_us": [c[1] for c in closed],
-                    "n_events": [c[2] for c in closed],
-                }
-            )
-
-    return update
-
-
-def streaming_session_gap(
-    records: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_minutes: int = 30,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Gap-based sessions with EVENT-TIME TIMEOUT closure: events extend
-    the open session while they arrive within ``gap_minutes`` of its end
-    (in event time); a session row is emitted exactly once — either when
-    a later event opens the NEXT session (gap jump inside a batch/key) or
-    when the watermark passes ``end + gap`` and the registered timer
-    fires (``GroupStateTimeout.EventTimeTimeout``). State is 3 longs per
-    ACTIVE key, removed at timeout — the bounded-forever shape; the
-    emitted (start, end, n_events) rows match the batch
-    ``sessionize_events`` lag+running-sum sessions over the same feed
-    (asserted in tests, including across a checkpoint restart).
-    """
-    keyed = records.select(
-        F.col(key_col).cast("string").alias("key"),
-        # watermarks accept TIMESTAMP only (EVENT_TIME_IS_NOT_ON_TIMESTAMP
-        # _TYPE on ntz) — cast for the watermark, keep ts_us exact micros
-        F.col(ts_col).cast("timestamp").alias("__ts"),
-        F.expr(
-            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00',"
-            f" CAST({ts_col} AS TIMESTAMP_NTZ))"
-        ).alias("ts_us"),
-    ).withWatermark("__ts", watermark)
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_session_updater(gap_minutes * 60 * 1_000_000),
-        outputStructType=SESSION_GAP_SCHEMA,
-        stateStructType=_SESSION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

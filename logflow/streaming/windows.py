@@ -50,7 +50,13 @@ def sliding_value_avg(events: DataFrame, watermark: str = "2 hours") -> DataFram
 
 def session_spans(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
     """Session windows per user with a 30-min inactivity gap (streaming
-    analog of the batch sessionize_events query)."""
+    analog of the batch sessionize_events query).
+
+    An event at most ``gap`` after the previous one joins its session;
+    one more than ``gap`` after it opens a new session, as in
+    ``sessionize_events``.  ``session_end`` is the last event + ``gap``.
+    In append mode each session is emitted once, when the watermark
+    passes its ``session_end``; state holds only the open sessions."""
     return (
         _event_time_ltz(events).withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")

@@ -7,7 +7,11 @@ File sources + availableNow triggers keep runs bounded and deterministic.
 
 from __future__ import annotations
 
+import ast
 import datetime
+import glob
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +21,7 @@ from logflow.sources.records import numbers_fixture
 from logflow.streaming.branch_sink import parquet_sink, start_branch_query
 from logflow.streaming.sources import file_record_stream
 from logflow.streaming.windows import deduped_stream, hourly_type_counts, session_spans
+from tests.conftest import REPO
 
 TRACE = "77" * 16
 
@@ -180,10 +185,16 @@ def test_streaming_hourly_counts_match_batch(spark, tmp_path):
 def test_streaming_session_window(spark, tmp_path):
     path = str(tmp_path / "ev2")
     base = datetime.datetime(2024, 1, 1)
+    gap = datetime.timedelta(minutes=30)
     rows = [
         (1, "click", base),
         (1, "click", base + datetime.timedelta(minutes=10)),  # same session
         (1, "click", base + datetime.timedelta(minutes=90)),  # new session (gap > 30m)
+        # the gap boundary: exactly gap after an event joins its session,
+        # gap + 1 µs after it opens a new one
+        (2, "click", base),
+        (2, "click", base + gap),
+        (2, "click", base + 2 * gap + datetime.timedelta(microseconds=1)),
     ]
     _write_events(spark, path, rows)
     stream = spark.readStream.schema("user_id long, event_type string, ts timestamp").parquet(path)
@@ -197,7 +208,15 @@ def test_streaming_session_window(spark, tmp_path):
     )
     q.awaitTermination(120)
     rows_out = spark.sql("select * from sessions_t").collect()
-    assert sorted(r.n_events for r in rows_out) == [1, 2]
+    assert sorted(r.n_events for r in rows_out if r.user_id == 1) == [1, 2]
+    user2 = sorted((r for r in rows_out if r.user_id == 2), key=lambda r: r.session_start)
+    assert [(r.n_events, r.session_end - r.session_start) for r in user2] == [
+        (2, 2 * gap),
+        (1, gap),
+    ]
+    assert user2[1].session_start - user2[0].session_start == (
+        2 * gap + datetime.timedelta(microseconds=1)
+    )
 
 
 def test_streaming_sliding_window_matches_batch(spark, tmp_path):
@@ -1850,17 +1869,18 @@ def test_streaming_dependency_graph_matches_batch(spark, tmp_path):
     assert os.path.isdir(str(tmp_path / "dep_ckpt"))
 
 
-def test_streaming_session_gap_timeout_matches_batch(spark, tmp_path):
-    """EventTimeTimeout sessions: per-user 30-min-gap sessions accumulate
-    in state and are emitted exactly once — either by an in-stream gap
-    jump or by the watermark timer after a restart. The closed sessions
-    must reproduce the batch sessionize_events aggregates exactly."""
+def test_streaming_session_spans_append_restart_matches_batch(spark, tmp_path):
+    """Append-mode session windows: per-user 30-min-gap sessions stay in
+    state until the watermark passes last event + gap, then are emitted
+    exactly once — some in the first run, the rest after a checkpoint
+    restart. The emitted sessions must reproduce the batch
+    sessionize_events aggregates exactly."""
+    import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from logflow.queries import load_all
     from logflow.sources.tables import load_table
-    from logflow.streaming.stateful import streaming_session_gap
 
     sf = "/root/testdata/sf0.001"
     ev = (
@@ -1891,11 +1911,11 @@ def test_streaming_session_gap_timeout_matches_batch(spark, tmp_path):
         def sink(batch_df, batch_id):
             for r in batch_df.collect():
                 emitted.append(
-                    (r.key, r.session_start_us, r.session_end_us, r.n_events)
+                    (r.user_id, r.session_start, r.session_end, r.n_events)
                 )
 
         q = (
-            streaming_session_gap(stream, "user_id", "ts", gap_minutes=30)
+            session_spans(stream, watermark="0 seconds")
             .writeStream.foreachBatch(sink)
             .outputMode("append")
             .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
@@ -1903,41 +1923,90 @@ def test_streaming_session_gap_timeout_matches_batch(spark, tmp_path):
             .start()
         )
         q.awaitTermination(300)
+        return q
 
     run()
     # sentinel far in the future advances the watermark past every real
-    # session's end + gap on RESTART, firing the timeout timers
+    # session's end on RESTART, so the still-open sessions are emitted
     sentinel = ev.iloc[[len(ev) - 1]].copy()
     sentinel["user_id"] = -1
-    sentinel["ts"] = (
-        sentinel["ts"] + __import__("pandas").Timedelta(days=10)
-    ).astype("datetime64[us]")
+    sentinel["ts"] = (sentinel["ts"] + pd.Timedelta(days=10)).astype("datetime64[us]")
     pq.write_table(pa.Table.from_pandas(sentinel), str(path / "z.parquet"))
-    run()
-
-    import pandas as pd
+    q = run()
+    # bounded state: only the sentinel's own open session is left
+    assert q.recentProgress[-1].stateOperators[0].numRowsTotal == 1
 
     got = pd.DataFrame(
-        [e for e in emitted if e[0] != "-1"],
-        columns=["key", "start_us", "end_us", "n"],
+        [e for e in emitted if e[0] != -1],
+        columns=["key", "start", "end", "n"],
     )
     # exactly-once: no duplicate session rows
     assert not got.duplicated().any()
     agg = got.groupby("key").agg(
         n_sessions=("n", "size"), n_events=("n", "sum"), max_ev=("n", "max")
     )
-    want = (
-        load_all()["sessionize_events"]
-        .fn(spark, sf)
-        .toPandas()
-        .assign(key=lambda d: d["user_id"].astype(str))
-        .set_index("key")
-    )
+    want = load_all()["sessionize_events"].fn(spark, sf).toPandas().set_index("user_id")
     assert len(agg) == len(want)
     for k, row in agg.iterrows():
         assert row["n_sessions"] == want.loc[k, "n_sessions"], k
         assert row["n_events"] == want.loc[k, "n_events"], k
         assert row["max_ev"] == want.loc[k, "max_session_events"], k
+
+
+#: the order-dependent state machines, the only callers of pandas state
+_PANDAS_STATE_OPS = {"streaming_funnel_counts", "streaming_heavy_hitters", "ks_drift_monitor"}
+_TIMER_RX = re.compile(r"GroupStateTimeout\.(?!NoTimeout\b)\w+|\b(?:EventTime|ProcessingTime)Timeout\b")
+
+
+def _state_path_misuse(text: str) -> list[int]:
+    """Line numbers of ``applyInPandasWithState`` calls outside
+    ``_PANDAS_STATE_OPS`` and of any group-state timeout but NoTimeout."""
+    hits = [text.count("\n", 0, m.start()) + 1 for m in _TIMER_RX.finditer(text)]
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                walk(child, child.name if fn is None else fn)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "applyInPandasWithState"
+                and fn not in _PANDAS_STATE_OPS
+            ):
+                hits.append(child.lineno)
+            walk(child, fn)
+
+    walk(ast.parse(text), None)
+    return sorted(hits)
+
+
+def test_pandas_state_only_for_order_dependent_ops():
+    """One state path per shape: pandas state serves only the funnel,
+    Misra-Gries and the KS monitor, and no operator sets a timer."""
+    hits = []
+    for path in glob.glob(os.path.join(REPO, "logflow", "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as fh:
+            hits += [f"{os.path.relpath(path, REPO)}:{n}" for n in _state_path_misuse(fh.read())]
+    assert not hits, f"pandas state or a state timer outside the order-dependent ops: {hits}"
+
+
+@pytest.mark.parametrize(
+    "snippet, misuse",
+    [
+        ("def ks_drift_monitor(r):\n    return r.applyInPandasWithState(f)\n", False),
+        ("def ks_drift_monitor(r):\n    def g():\n        r.applyInPandasWithState(f)\n", False),
+        ("def sessions(r):\n    return r.applyInPandasWithState(f)\n", True),
+        ("x = r.applyInPandasWithState(f)\n", True),
+        ("t = GroupStateTimeout.NoTimeout\n", False),
+        ("t = GroupStateTimeout.EventTimeTimeout\n", True),
+        ("t = GroupStateTimeout.ProcessingTimeTimeout\n", True),
+        ("t = 'EventTimeTimeout'\n", True),
+        ("# a checkpoint of the earlier applyInPandasWithState layout\n", False),
+    ],
+)
+def test_state_path_guard_pattern(snippet, misuse):
+    assert bool(_state_path_misuse(snippet)) is misuse
 
 
 def test_source_statestore_depgraph_matches_batch(spark, duck, sf_dir):
